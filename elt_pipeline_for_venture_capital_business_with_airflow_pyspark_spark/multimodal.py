@@ -29,15 +29,15 @@ layer so the distributed shape stays verifiable end-to-end.
 
 At 100 TB: binaries live in the lake as parquet binary columns (or
 pointers to object-store blobs for >row-group-size payloads — the
-``uri`` field); decode/feature-extract runs in ``mapInPandas`` so each
-task streams Arrow batches without materializing a partition.
+``uri`` field); decode/feature-extract runs through :func:`map_rows`
+(one ``mapInPandas`` stage) so each task streams Arrow batches without
+materializing a partition.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -66,6 +66,44 @@ FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes int, sha1 string, md5 string, "
     "feature array<double>"
 )
+
+
+def map_rows(df: DataFrame, fn: Callable, schema: str | T.StructType) -> DataFrame:
+    """The engine's one Arrow-batch boundary: ``fn`` runs on every row
+    of ``df`` inside ONE ``mapInPandas`` stage.
+
+    ``fn`` receives the row's columns, in ``df``'s order, as positional
+    Python values (``select`` down to what it needs first) and returns
+    a list of output row tuples: ``[row]`` maps 1→1, ``[]`` drops the
+    row, several rows fan out. ``schema`` (DDL string or
+    ``StructType``) is parsed once, on the driver, and names the
+    output columns.
+
+    Each output column is built as an object-dtype ``pd.Series``, so
+    Arrow converts the Python values straight to the declared type.
+    pandas never infers a dtype: inference turns an int64 column that
+    holds a NULL into float64, which cannot carry values past 2^53."""
+    struct = schema if isinstance(schema, T.StructType) else T.DataType.fromDDL(schema)
+    names = struct.fieldNames()
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                out
+                for args in pdf.itertuples(index=False, name=None)
+                for out in fn(*args)
+            ]
+            cols = zip(*rows, strict=True) if rows else [()] * len(names)
+            yield pd.DataFrame(
+                {
+                    n: pd.Series(c, dtype=object)
+                    for n, c in zip(names, cols, strict=True)
+                }
+            )
+
+    return df.mapInPandas(run, struct)
 
 
 # ---------------------------------------------------------------------------
@@ -559,39 +597,31 @@ def _decode_features(payload: bytes | None, dim: int = 8) -> list[float]:
 def extract_features(media: DataFrame, feature_dim: int = 8) -> DataFrame:
     """Arrow-batched feature extraction over the media table.
 
-    ``mapInPandas`` streams record batches through the extractor —
+    :func:`map_rows` streams record batches through the extractor —
     constant memory per task regardless of partition size, no
     driver-side collection. Columns are pruned to exactly what the
     extractor needs before the Python boundary.
     """
     import hashlib
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    # NULL (not 0/'') for a missing payload — the same
-                    # propagation SQL gives octet_length(NULL)/md5(NULL)
-                    "n_bytes": pdf["payload"]
-                    .map(lambda p: None if p is None else len(p))
-                    .astype("Int32"),
-                    "sha1": pdf["payload"].map(
-                        lambda p: None if p is None else hashlib.sha1(p).hexdigest()
-                    ),
-                    "md5": pdf["payload"].map(
-                        lambda p: None if p is None else hashlib.md5(p).hexdigest()
-                    ),
-                    "feature": pdf["payload"].map(
-                        lambda p: _decode_features(p, feature_dim)
-                    ),
-                }
+    def row(media_id, kind, payload):
+        if payload is None:
+            # NULL (not 0/'') for a missing payload — the same
+            # propagation SQL gives octet_length(NULL)/md5(NULL)
+            return [(media_id, kind, None, None, None, None)]
+        return [
+            (
+                media_id,
+                kind,
+                len(payload),
+                hashlib.sha1(payload).hexdigest(),
+                hashlib.md5(payload).hexdigest(),
+                _decode_features(payload, feature_dim),
             )
-            yield out
+        ]
 
     pruned = media.select("media_id", F.col("meta.kind").alias("kind"), "payload")
-    return pruned.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(pruned, row, FEATURE_SCHEMA)
 
 
 FRAME_SAMPLE_SCHEMA = (
@@ -611,7 +641,7 @@ def sample_frames_mjpeg(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     work, which is the point of sampling.
 
     Plan shape: prune to (media_id, payload) → ONE Arrow
-    ``mapInPandas`` stage → typed rows; no shuffle, no driver
+    :func:`map_rows` stage → typed rows; no shuffle, no driver
     collection, constant memory per batch. At 100 TB the stage is
     embarrassingly parallel; repartition upstream by payload size if
     containers skew.
@@ -620,45 +650,35 @@ def sample_frames_mjpeg(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     route dead blobs through a quarantine filter upstream, the same
     policy as decode_image."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal_avi import parse_avi
+    from .multimodal_avi import parse_avi
 
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                stream = parse_avi(bytes(payload))
-                frame_ms = max(1, stream.frame_ms)
-                step = max(1, every_ms // frame_ms)
-                for idx in range(0, len(stream.frames), step):
-                    # codec-appropriate decode: MJPEG frames through
-                    # the JPEG codec, uncompressed DIB unswizzled
-                    # (round-9 continuation)
-                    w, h, rgb = stream.decode_frame(idx)
-                    vals = set(rgb)
-                    rows.append(
-                        (
-                            int(mid),
-                            idx,
-                            idx * frame_ms,
-                            w,
-                            h,
-                            len(rgb),
-                            len(vals),
-                            vals.pop() if len(vals) == 1 else None,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "ts_ms", "width", "height",
-                    "n_bytes", "n_distinct_values", "pixel_value",
-                ],
+    def frames(mid, payload):
+        if payload is None:
+            return []
+        stream = parse_avi(bytes(payload))
+        frame_ms = max(1, stream.frame_ms)
+        step = max(1, every_ms // frame_ms)
+        rows = []
+        for idx in range(0, len(stream.frames), step):
+            # codec-appropriate decode: MJPEG frames through the JPEG
+            # codec, uncompressed DIB unswizzled (round-9 continuation)
+            w, h, rgb = stream.decode_frame(idx)
+            vals = set(rgb)
+            rows.append(
+                (
+                    mid,
+                    idx,
+                    idx * frame_ms,
+                    w,
+                    h,
+                    len(rgb),
+                    len(vals),
+                    vals.pop() if len(vals) == 1 else None,
+                )
             )
+        return rows
 
-    pruned = media.select("media_id", "payload")
-    return pruned.mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)
+    return map_rows(media.select("media_id", "payload"), frames, FRAME_SAMPLE_SCHEMA)
 
 
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -711,7 +731,7 @@ def resize_images(
     upstream by payload-size histogram when batches skew.
     """
 
-    def _resize(payload, w, h, tw, th):
+    def _resize(payload, tw, th):
         if payload is None:
             return None  # dead blob routes onward as NULL, never a crash
         try:
@@ -720,24 +740,8 @@ def resize_images(
             return payload  # undecodable format: documented passthrough
         return encode_ppm(tw, th, resize_rgb(rgb, dw, dh, int(tw), int(th)))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "src_width": pdf["width"],
-                    "src_height": pdf["height"],
-                    "dst_width": pdf["dst_width"],
-                    "dst_height": pdf["dst_height"],
-                    "payload": [
-                        _resize(p, w, h, tw, th)
-                        for p, w, h, tw, th in zip(
-                            pdf["payload"], pdf["width"], pdf["height"],
-                            pdf["dst_width"], pdf["dst_height"],
-                        )
-                    ],
-                }
-            )
+    def row(media_id, w, h, tw, th, payload):
+        return [(media_id, w, h, tw, th, _resize(payload, tw, th))]
 
     w, h = F.col("meta.width"), F.col("meta.height")
     scale = F.lit(max_side) / F.greatest(w, h)
@@ -758,13 +762,13 @@ def resize_images(
         .alias("dst_height"),
         "payload",
     )
-    return pruned.mapInPandas(run, schema=RESIZE_SCHEMA)
+    return map_rows(pruned, row, RESIZE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # Audio: WAV/PCM codec (round 7) — RIFF container + 8/16-bit integer
 # PCM are fully stdlib-decodable (`struct`), so audio joins PPM/BMP/PNG
-# as a REAL codec behind the same mapInPandas boundary. Compressed or
+# as a REAL codec behind the same map_rows boundary. Compressed or
 # float WAV (IEEE float, ADPCM, mu-law) and every non-WAV audio format
 # stay an honest NotImplementedError — the module policy: a real codec
 # or a loud refusal, never a silent wrong answer.
@@ -1493,7 +1497,7 @@ AUDIO_FEATURE_SCHEMA = (
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
     """Audio feature extraction over binary WAV payloads — the second
-    REAL modality behind the mapInPandas boundary (mirrors the PNG
+    REAL modality behind the map_rows boundary (mirrors the PNG
     image path): decode is the stdlib PCM codec above; every emitted
     feature is EXACT integer arithmetic on the decoded samples, so an
     oracle that knows the sample values reproduces them bit-for-bit:
@@ -1542,19 +1546,11 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
             zc,
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "sample_rate", "bits", "n_channels", "n_samples",
-            "duration_ms", "peak", "sum_sq", "zero_crossings",
-        ]
-        for pdf in batches:
-            rows = [_feats(p) for p in pdf["payload"]]
-            out = pd.DataFrame(rows, columns=cols)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
-
-    pruned = media.select("media_id", "payload")
-    return pruned.mapInPandas(run, schema=AUDIO_FEATURE_SCHEMA)
+    return map_rows(
+        media.select("media_id", "payload"),
+        lambda mid, payload: [(mid, *_feats(payload))],
+        AUDIO_FEATURE_SCHEMA,
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1685,19 +1681,10 @@ def phash_images(media: DataFrame) -> DataFrame:
     hamming join, persisted indexes) ships longs, never pixels — the
     posture that matters at 100 TB."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "phash": pd.array(
-                        [phash64(p) for p in pdf["payload"]], dtype="Int64"
-                    ),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=PHASH_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"),
+        lambda mid, payload: [(mid, phash64(payload))],
+        PHASH_SCHEMA,
     )
 
 
@@ -1806,17 +1793,10 @@ def extract_spectral_features(
             int(ch0.sum()),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["sample_rate", "n_samples", "n_frames", "dominant_bin", "dc_sum"]
-        for pdf in batches:
-            out = pd.DataFrame(
-                [_feats(p) for p in pdf["payload"]], columns=cols
-            )
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=SPECTRAL_SCHEMA
+    return map_rows(
+        media.select("media_id", "payload"),
+        lambda mid, payload: [(mid, *_feats(payload))],
+        SPECTRAL_SCHEMA,
     )
 
 

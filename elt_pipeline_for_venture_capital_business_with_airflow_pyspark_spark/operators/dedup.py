@@ -930,7 +930,10 @@ def connected_components(
       vastly outnumber linked nodes; a node with no edges can never
       receive a message, so its label provably stays its own id —
       singletons are appended after the loop with component = id,
-      never shuffled through the rounds.
+      never shuffled through the rounds. An edge endpoint missing
+      from ``nodes`` is an ordinary vertex: it can carry the
+      component minimum (as in :func:`connected_components_star`)
+      and it gets an output row of its own.
     - Labels are ``localCheckpoint``-ed per round to cut the lineage
       (an unbounded iterative plan otherwise recompiles and recomputes
       from scratch every round); early-exit via an isEmpty probe on
@@ -970,11 +973,22 @@ def connected_components(
     edge_nodes = sym.select(F.col("a").alias("id")).distinct().join(
         all_nodes, "id"
     )
-    labels = edge_nodes.select("id", F.col("id").alias("comp"))
-    labels = labels.repartition(F.col("id")).localCheckpoint(eager=True)
-
     from pyspark.sql import Observation
 
+    # EVERY edge endpoint starts with its own label, including ids
+    # missing from `nodes`: such a dangling endpoint may be the
+    # component minimum (connected_components_star labels it so), and
+    # an endpoint that first appeared mid-loop would have no previous
+    # label for the convergence count below to compare against
+    n_labels = Observation()
+    labels = (
+        sym.select(F.col("a").alias("id"))
+        .distinct()
+        .select("id", F.col("id").alias("comp"))
+        .repartition(F.col("id"))
+        .observe(n_labels, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
     # convergence probe FOLDED into the round's one materializing
     # action (round-13, guide §2.4/§1.5): the previous shape ran a
     # second job per round — new_labels ⋈ labels on id (two more
@@ -982,11 +996,9 @@ def connected_components(
     # the union tagged __is_old (exactly one old row per id, so
     # min(when(__is_old, comp)) IS the previous label), and an
     # observe() metric counts changed ids DURING the eager
-    # localCheckpoint job. The label frames and the convergence
-    # decisions are unchanged (ids the old inner-join probe skipped —
-    # edge endpoints absent from `nodes` on their first round — have
-    # NULL __old, and comp != NULL is NULL, which sum() skips,
-    # matching the inner join).
+    # localCheckpoint job. Every id a message can reach is an edge
+    # endpoint, so it already holds an old label and __old is never
+    # NULL for it.
     def _step(lbl: DataFrame) -> "tuple[DataFrame, Observation]":
         msgs = sym.join(lbl, sym["b"] == lbl["id"]).select(
             F.col("a").alias("id"), "comp", F.lit(False).alias("__is_old")
@@ -1022,7 +1034,10 @@ def connected_components(
     # one step when step 1 already converged changes nothing; `rounds`
     # still counts the propagation steps the result needed, exactly as
     # the one-step loop reported them.
-    converged = False
+    # no labels, nothing to propagate — and over an empty label set
+    # AQE prunes the fused job's inner observe() along with its empty
+    # input, so that metric would never arrive
+    converged = n_labels.get["n"] == 0
     rounds = 0
     while rounds < max_iter and not converged:
         step1, obs1 = _step(labels)

@@ -145,8 +145,7 @@ def khop_min_dist(
     src: str = "src",
     dst: str = "dst",
     node: str = "node",
-    materialize_edges: bool = True,
-    materialize: str | None = None,
+    materialize: str = "disk_persist",
 ) -> DataFrame:
     """Bounded-depth BFS: minimum hop distance (≤ ``k``) from a seed
     set over a directed edge list — the DataFrame twin of an ANSI
@@ -189,14 +188,10 @@ def khop_min_dist(
     - ``"none"``: fully lazy — the derivation re-runs per level; right
       for explain-plan inspection and trivially-derived edge frames.
 
-    Default is ``"disk_persist"`` (cluster-safe); the legacy boolean
-    ``materialize_edges=False`` maps to ``"none"`` for back-compat and
-    is ignored when ``materialize`` is passed explicitly.
+    Default is ``"disk_persist"`` (cluster-safe).
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    if materialize is None:
-        materialize = "disk_persist" if materialize_edges else "none"
     if materialize not in ("local_checkpoint", "disk_persist", "none"):
         raise ValueError(f"unknown materialize mode: {materialize!r}")
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))

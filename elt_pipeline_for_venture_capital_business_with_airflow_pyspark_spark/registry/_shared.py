@@ -1526,30 +1526,20 @@ def _synth_family_media(docs: DataFrame) -> DataFrame:
     pairwise hamming > 3 is pinned in tests/test_phash.py (the
     formula there must stay in sync with this one)."""
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal import (
-            encode_ppm,
-        )
+    w, h = 48, 40
 
-        w, h = 48, 40
-        idx = np.arange(w * h * 3, dtype=np.uint64)
-        for pdf in batches:
-            rows = []
-            for mid, fam in zip(pdf["media_id"], pdf["fam"]):
-                x = idx * np.uint64(2654435761) + np.uint64(
-                    int(fam) * 1000003 + 12345
-                )
-                x ^= x >> np.uint64(13)
-                x = x * np.uint64(0x9E3779B97F4A7C15)
-                x ^= x >> np.uint64(7)
-                rgb = (x & np.uint64(255)).astype(np.uint8).tobytes()
-                rows.append((int(mid), encode_ppm(w, h, rgb)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def synth(mid, fam):
+        x = np.arange(w * h * 3, dtype=np.uint64) * np.uint64(2654435761)
+        x += np.uint64(fam * 1000003 + 12345)
+        x ^= x >> np.uint64(13)
+        x = x * np.uint64(0x9E3779B97F4A7C15)
+        x ^= x >> np.uint64(7)
+        rgb = (x & np.uint64(255)).astype(np.uint8).tobytes()
+        return [(mid, multimodal.encode_ppm(w, h, rgb))]
 
-    return docs.mapInPandas(synth, "media_id long, payload binary")
+    return multimodal.map_rows(docs, synth, "media_id long, payload binary")
 
 
 

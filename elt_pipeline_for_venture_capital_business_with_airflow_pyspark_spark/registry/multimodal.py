@@ -131,28 +131,11 @@ def _multimodal_audio_features(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def gen(batches):
-        import pandas as pd
+    def gen(mid, n, d):
+        samples = [((d * 7919 + i * 131) % 256) - 128 for i in range(n)]
+        return [(mid, multimodal.encode_wav(8000, samples, bits=8))]
 
-        for pdf in batches:
-            payloads = [
-                bytearray(
-                    multimodal.encode_wav(
-                        8000,
-                        [
-                            ((int(d) * 7919 + i * 131) % 256) - 128
-                            for i in range(int(n))
-                        ],
-                        bits=8,
-                    )
-                )
-                for d, n in zip(pdf["d"], pdf["n"])
-            ]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = multimodal.map_rows(docs, gen, "media_id long, payload binary")
     feats = multimodal.extract_audio_features(media)
     return feats.select(
         "media_id",
@@ -212,40 +195,21 @@ def _multimodal_jpeg_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def roundtrip(batches):
-        import pandas as pd
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_jpeg import (
+        decode_jpeg,
+        encode_jpeg,
+    )
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_jpeg import (
-            decode_jpeg,
-            encode_jpeg,
-        )
+    def roundtrip(mid, w, h):
+        payload = encode_jpeg(w, h, bytes([128]) * (w * h * 3), 85)
+        dw, dh, rgb = decode_jpeg(payload)
+        vals = set(rgb)
+        return [
+            (mid, dw, dh, len(rgb), len(vals), vals.pop() if len(vals) == 1 else None)
+        ]
 
-        for pdf in batches:
-            rows = []
-            for mid, w, h in zip(pdf["media_id"], pdf["w"], pdf["h"]):
-                w, h = int(w), int(h)
-                payload = encode_jpeg(w, h, bytes([128]) * (w * h * 3), 85)
-                dw, dh, rgb = decode_jpeg(payload)
-                vals = set(rgb)
-                rows.append(
-                    (
-                        int(mid),
-                        dw,
-                        dh,
-                        len(rgb),
-                        len(vals),
-                        vals.pop() if len(vals) == 1 else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_bytes",
-                    "n_distinct_values", "pixel_value",
-                ],
-            )
-
-    return docs.mapInPandas(
+    return multimodal.map_rows(
+        docs,
         roundtrip,
         "media_id long, width int, height int, n_bytes long, "
         "n_distinct_values int, pixel_value int",
@@ -291,45 +255,31 @@ def _multimodal_jpeg_subsampled(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def roundtrip(batches):
-        import pandas as pd
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_jpeg import (
+        decode_jpeg,
+        encode_jpeg,
+    )
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_jpeg import (
-            decode_jpeg,
-            encode_jpeg,
-        )
-
-        for pdf in batches:
-            rows = []
-            for mid, w, h in zip(pdf["media_id"], pdf["w"], pdf["h"]):
-                w, h = int(w), int(h)
-                payload = encode_jpeg(
-                    w, h, bytes([128]) * (w * h * 3), 85, subsample="420"
-                )
-                sof = payload.index(b"\xff\xc0")
-                sampling = payload[sof + 11]
-                dw, dh, rgb = decode_jpeg(payload)
-                vals = set(rgb)
-                rows.append(
-                    (
-                        int(mid),
-                        dw,
-                        dh,
-                        sampling,
-                        len(rgb),
-                        len(vals),
-                        vals.pop() if len(vals) == 1 else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "sof_sampling",
-                    "n_bytes", "n_distinct_values", "pixel_value",
-                ],
+    def roundtrip(mid, w, h):
+        payload = encode_jpeg(w, h, bytes([128]) * (w * h * 3), 85, subsample="420")
+        sof = payload.index(b"\xff\xc0")
+        sampling = payload[sof + 11]
+        dw, dh, rgb = decode_jpeg(payload)
+        vals = set(rgb)
+        return [
+            (
+                mid,
+                dw,
+                dh,
+                sampling,
+                len(rgb),
+                len(vals),
+                vals.pop() if len(vals) == 1 else None,
             )
+        ]
 
-    return docs.mapInPandas(
+    return multimodal.map_rows(
+        docs,
         roundtrip,
         "media_id long, width int, height int, sof_sampling int, "
         "n_bytes long, n_distinct_values int, pixel_value int",
@@ -382,43 +332,26 @@ def _multimodal_audio_adpcm(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def roundtrip(batches):
-        import pandas as pd
-
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal import (
-            decode_wav,
-            encode_wav_adpcm,
+    def roundtrip(mid, d, n):
+        src = [(d * 31 + i * 17) % 2001 - 1000 for i in range(n)]
+        rate, bits, nch, out = multimodal.decode_wav(
+            multimodal.encode_wav_adpcm(8000, src)
         )
-
-        for pdf in batches:
-            rows = []
-            for mid, d, n in zip(pdf["media_id"], pdf["d"], pdf["n"]):
-                d, n = int(d), int(n)
-                src = [(d * 31 + i * 17) % 2001 - 1000 for i in range(n)]
-                rate, bits, nch, out = decode_wav(
-                    encode_wav_adpcm(8000, src)
-                )
-                nblocks = (n - 1) // 505 + 1
-                rows.append(
-                    (
-                        int(mid),
-                        rate,
-                        bits,
-                        nch,
-                        len(out),
-                        out[0],
-                        sum(out[505 * k] for k in range(nblocks)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "sample_rate", "bits", "n_channels",
-                    "n_samples", "first_sample", "block_header_sum",
-                ],
+        nblocks = (n - 1) // 505 + 1
+        return [
+            (
+                mid,
+                rate,
+                bits,
+                nch,
+                len(out),
+                out[0],
+                sum(out[505 * k] for k in range(nblocks)),
             )
+        ]
 
-    return docs.mapInPandas(
+    return multimodal.map_rows(
+        docs,
         roundtrip,
         "media_id long, sample_rate int, bits int, n_channels int, "
         "n_samples long, first_sample long, block_header_sum long",
@@ -462,44 +395,32 @@ def _multimodal_jpeg_progressive(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def roundtrip(batches):
-        import pandas as pd
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_jpeg import (
+        decode_jpeg,
+        encode_jpeg_progressive,
+    )
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_jpeg import (
-            decode_jpeg,
-            encode_jpeg_progressive,
+    def roundtrip(mid, w, h):
+        payload = encode_jpeg_progressive(
+            w, h, bytes([128]) * (w * h * 3), 85, subsample="420"
         )
-
-        for pdf in batches:
-            rows = []
-            for mid, w, h in zip(pdf["media_id"], pdf["w"], pdf["h"]):
-                w, h = int(w), int(h)
-                payload = encode_jpeg_progressive(
-                    w, h, bytes([128]) * (w * h * 3), 85, subsample="420"
-                )
-                sof = payload.index(b"\xff\xc2")
-                dw, dh, rgb = decode_jpeg(payload)
-                vals = set(rgb)
-                rows.append(
-                    (
-                        int(mid),
-                        dw,
-                        dh,
-                        payload[sof + 1],
-                        len(rgb),
-                        len(vals),
-                        vals.pop() if len(vals) == 1 else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "sof_marker",
-                    "n_bytes", "n_distinct_values", "pixel_value",
-                ],
+        sof = payload.index(b"\xff\xc2")
+        dw, dh, rgb = decode_jpeg(payload)
+        vals = set(rgb)
+        return [
+            (
+                mid,
+                dw,
+                dh,
+                payload[sof + 1],
+                len(rgb),
+                len(vals),
+                vals.pop() if len(vals) == 1 else None,
             )
+        ]
 
-    return docs.mapInPandas(
+    return multimodal.map_rows(
+        docs,
         roundtrip,
         "media_id long, width int, height int, sof_marker int, "
         "n_bytes long, n_distinct_values int, pixel_value int",
@@ -555,29 +476,18 @@ def _multimodal_frame_sample_mjpeg(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def gen(batches):
-        import pandas as pd
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_avi import (
+        encode_avi_mjpeg,
+    )
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_jpeg import (
+        encode_jpeg,
+    )
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_avi import (
-            encode_avi_mjpeg,
-        )
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_jpeg import (
-            encode_jpeg,
-        )
+    def gen(mid, nf, w, h):
+        frame = encode_jpeg(w, h, bytes([128]) * (w * h * 3), 85, subsample="420")
+        return [(mid, encode_avi_mjpeg(w, h, [frame] * nf, fps=10))]
 
-        for pdf in batches:
-            rows = []
-            for mid, nf, w, h in zip(pdf["media_id"], pdf["nf"], pdf["w"], pdf["h"]):
-                w, h = int(w), int(h)
-                frame = encode_jpeg(
-                    w, h, bytes([128]) * (w * h * 3), 85, subsample="420"
-                )
-                rows.append(
-                    (int(mid), bytearray(encode_avi_mjpeg(w, h, [frame] * int(nf), fps=10)))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(gen, "media_id long, payload binary")
+    media = multimodal.map_rows(docs, gen, "media_id long, payload binary")
     return multimodal.sample_frames_mjpeg(media, every_ms=200)
 
 
@@ -776,27 +686,12 @@ def _multimodal_audio_spectrum(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
+    def synth(mid, qp):
+        p = qp * 4
+        wave = [8192 if i % p < p // 2 else -8192 for i in range(1920)]
+        return [(mid, multimodal.encode_wav(16000, wave, bits=16))]
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal import (
-            encode_wav,
-        )
-
-        n = 1920
-        i = np.arange(n)
-        for pdf in batches:
-            rows = []
-            for mid, qp in zip(pdf["media_id"], pdf["quarter_period"]):
-                p = int(qp) * 4
-                wave = np.where(i % p < p // 2, 8192, -8192)
-                rows.append(
-                    (int(mid), encode_wav(16000, wave.tolist(), bits=16))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, "media_id long, payload binary")
+    media = multimodal.map_rows(docs, synth, "media_id long, payload binary")
     return multimodal.extract_spectral_features(media, frame=256, hop=128)
 
 
@@ -851,47 +746,36 @@ def _multimodal_gif_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def roundtrip(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_gif import (
-            decode_gif,
-            encode_gif,
-            gif_frame_count,
-        )
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_gif import (
+        decode_gif,
+        encode_gif,
+        gif_frame_count,
+    )
 
-        ca = np.array([10, 20, 30], dtype=np.uint8)
-        cb = np.array([200, 210, 220], dtype=np.uint8)
-        for pdf in batches:
-            rows = []
-            for mid, w, h, nf in zip(pdf["media_id"], pdf["w"], pdf["h"], pdf["nf"]):
-                w, h, nf = int(w), int(h), int(nf)
-                par = (np.add.outer(np.arange(h), np.arange(w)) % 2)[..., None]
-                rgb = np.where(par == 0, ca, cb).astype(np.uint8).tobytes()
-                payload = encode_gif(w, h, rgb, n_frames=nf)
-                dw, dh, drgb = decode_gif(payload)
-                arr = np.frombuffer(drgb, dtype=np.uint8).reshape(dh * dw, 3)
-                uniq = np.unique(arr, axis=0)
-                rows.append(
-                    (
-                        int(mid),
-                        dw,
-                        dh,
-                        gif_frame_count(payload),
-                        len(uniq),
-                        int((arr == ca).all(axis=1).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_frames",
-                    "n_distinct_colors", "count_color_a",
-                ],
+    ca = np.array([10, 20, 30], dtype=np.uint8)
+    cb = np.array([200, 210, 220], dtype=np.uint8)
+
+    def roundtrip(mid, w, h, nf):
+        par = (np.add.outer(np.arange(h), np.arange(w)) % 2)[..., None]
+        rgb = np.where(par == 0, ca, cb).astype(np.uint8).tobytes()
+        payload = encode_gif(w, h, rgb, n_frames=nf)
+        dw, dh, drgb = decode_gif(payload)
+        arr = np.frombuffer(drgb, dtype=np.uint8).reshape(dh * dw, 3)
+        return [
+            (
+                mid,
+                dw,
+                dh,
+                gif_frame_count(payload),
+                len(np.unique(arr, axis=0)),
+                int((arr == ca).all(axis=1).sum()),
             )
+        ]
 
-    return docs.mapInPandas(
+    return multimodal.map_rows(
+        docs,
         roundtrip,
         "media_id long, width int, height int, n_frames int, "
         "n_distinct_colors int, count_color_a long",
@@ -964,54 +848,40 @@ def _multimodal_audio_g711(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def run(batches):
-        import pandas as pd
+    import struct as _struct
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal import (
-            decode_wav,
-            encode_wav_g711,
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal import (
+        decode_wav,
+        encode_wav_g711,
+    )
+
+    # companded payloads holding every code 0..255: round-trip through
+    # encode (compress of the exact expansion) would bias toward
+    # self-consistency, so the data section is the raw code ramp — the
+    # decode is judged against SQL-recomputed expansion
+    def ramp_wav(tag: int) -> bytes:
+        fmt = _struct.pack("<HHIIHH", tag, 1, 8000, 8000, 1, 8)
+        body = (
+            b"fmt " + _struct.pack("<I", 16) + fmt
+            + b"data" + _struct.pack("<I", 256) + bytes(range(256))
         )
+        return b"RIFF" + _struct.pack("<I", 4 + len(body)) + b"WAVE" + body
 
-        # companded payloads holding every code 0..255: round-trip
-        # through encode (compress of the exact expansion) would bias
-        # toward self-consistency, so the data section is the raw code
-        # ramp — the decode is judged against SQL-recomputed expansion
-        import struct as _struct
+    _, _, _, u_all = decode_wav(ramp_wav(7))
+    _, _, _, a_all = decode_wav(ramp_wav(6))
+    # determinism guard: the library encoder must agree with the raw
+    # construction (exercises encode_wav_g711 in the entry too)
+    assert decode_wav(encode_wav_g711(8000, u_all, law="ulaw")) == (
+        8000, 8, 1, u_all
+    )
 
-        def ramp_wav(tag: int) -> bytes:
-            fmt = _struct.pack("<HHIIHH", tag, 1, 8000, 8000, 1, 8)
-            body = (
-                b"fmt " + _struct.pack("<I", 16) + fmt
-                + b"data" + _struct.pack("<I", 256) + bytes(range(256))
-            )
-            return b"RIFF" + _struct.pack("<I", 4 + len(body)) + b"WAVE" + body
+    def run(mid, fam):
+        u = [v for c, v in enumerate(u_all) if c % 5 == fam]
+        a = [v for c, v in enumerate(a_all) if c % 5 == fam]
+        return [(mid, len(u), sum(u), min(u), max(u), sum(a), min(a), max(a))]
 
-        pu = ramp_wav(7)
-        pa = ramp_wav(6)
-        _, _, _, u_all = decode_wav(pu)
-        _, _, _, a_all = decode_wav(pa)
-        # determinism guard: the library encoder must agree with the
-        # raw construction (exercises encode_wav_g711 in the entry too)
-        assert decode_wav(encode_wav_g711(8000, u_all, law="ulaw")) == (
-            8000, 8, 1, u_all
-        )
-        for pdf in batches:
-            rows = []
-            for mid, fam in zip(pdf["media_id"], pdf["fam"]):
-                fam = int(fam)
-                u = [v for c, v in enumerate(u_all) if c % 5 == fam]
-                a = [v for c, v in enumerate(a_all) if c % 5 == fam]
-                rows.append(
-                    (int(mid), len(u), sum(u), min(u), max(u),
-                     sum(a), min(a), max(a))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_codes", "u_sum", "u_min",
-                         "u_max", "a_sum", "a_min", "a_max"],
-            )
-
-    return docs.mapInPandas(
+    return multimodal.map_rows(
+        docs,
         run,
         "media_id long, n_codes long, u_sum long, u_min int, u_max int, "
         "a_sum long, a_min int, a_max int",
@@ -1054,35 +924,18 @@ def _multimodal_audio_msadpcm(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def run(batches):
-        import pandas as pd
-
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal import (
-            decode_wav,
-            encode_wav_ms_adpcm,
+    def run(mid, level):
+        payload = multimodal.encode_wav_ms_adpcm(
+            8000, [level] * 300, samples_per_block=128
         )
+        rate, _bits, _nch, out = multimodal.decode_wav(payload)
+        vals = set(out)
+        return [
+            (mid, rate, len(out), len(vals), vals.pop() if len(vals) == 1 else None)
+        ]
 
-        for pdf in batches:
-            rows = []
-            for mid, level in zip(pdf["media_id"], pdf["level"]):
-                payload = encode_wav_ms_adpcm(
-                    8000, [int(level)] * 300, samples_per_block=128
-                )
-                rate, _bits, _nch, out = decode_wav(payload)
-                vals = set(out)
-                rows.append(
-                    (
-                        int(mid), rate, len(out), len(vals),
-                        vals.pop() if len(vals) == 1 else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "sample_rate", "n_samples",
-                         "n_distinct_values", "sample_value"],
-            )
-
-    return docs.mapInPandas(
+    return multimodal.map_rows(
+        docs,
         run,
         "media_id long, sample_rate int, n_samples long, "
         "n_distinct_values int, sample_value int",
@@ -1127,32 +980,14 @@ def _multimodal_audio_float(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def run(batches):
-        import pandas as pd
+    def run(mid, k):
+        payload = multimodal.encode_wav_float(16000, [k / 64.0] * 50)
+        _rate, bits, _nch, out = multimodal.decode_wav(payload)
+        vals = set(out)
+        return [(mid, bits, len(out), vals.pop() if len(vals) == 1 else None)]
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal import (
-            decode_wav,
-            encode_wav_float,
-        )
-
-        for pdf in batches:
-            rows = []
-            for mid, k in zip(pdf["media_id"], pdf["k"]):
-                payload = encode_wav_float(16000, [int(k) / 64.0] * 50)
-                _rate, bits, _nch, out = decode_wav(payload)
-                vals = set(out)
-                rows.append(
-                    (
-                        int(mid), bits, len(out),
-                        vals.pop() if len(vals) == 1 else None,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "bits", "n_samples", "sample_value"],
-            )
-
-    return docs.mapInPandas(
+    return multimodal.map_rows(
+        docs,
         run,
         "media_id long, bits int, n_samples long, sample_value int",
     )
@@ -1210,47 +1045,39 @@ def _multimodal_tiff_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def roundtrip(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_tiff import (
-            decode_tiff,
-            encode_tiff,
-            tiff_page_count,
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_tiff import (
+        decode_tiff,
+        encode_tiff,
+        tiff_page_count,
+    )
+
+    ca = np.array([10, 20, 30], dtype=np.uint8)
+    cb = np.array([200, 210, 220], dtype=np.uint8)
+
+    def roundtrip(mid, w, h, npg):
+        par = (np.add.outer(np.arange(h), np.arange(w)) % 2)[..., None]
+        rgb = np.where(par == 0, ca, cb).astype(np.uint8).tobytes()
+        comp = ["packbits", "lzw", "deflate"][mid % 3]
+        payload = encode_tiff(
+            w, h, rgb,
+            compression=comp, rows_per_strip=3,
+            big_endian=True, n_pages=npg,
+            predictor=2 if comp == "deflate" else 1,
         )
-
-        ca = np.array([10, 20, 30], dtype=np.uint8)
-        cb = np.array([200, 210, 220], dtype=np.uint8)
-        for pdf in batches:
-            rows = []
-            for mid, w, h, npg in zip(pdf["media_id"], pdf["w"], pdf["h"], pdf["np"]):
-                w, h, npg = int(w), int(h), int(npg)
-                par = (np.add.outer(np.arange(h), np.arange(w)) % 2)[..., None]
-                rgb = np.where(par == 0, ca, cb).astype(np.uint8).tobytes()
-                comp = ["packbits", "lzw", "deflate"][mid % 3]
-                payload = encode_tiff(
-                    w, h, rgb,
-                    compression=comp, rows_per_strip=3,
-                    big_endian=True, n_pages=npg,
-                    predictor=2 if comp == "deflate" else 1,
-                )
-                dw, dh, drgb = decode_tiff(payload)
-                arr = np.frombuffer(drgb, dtype=np.uint8).reshape(dh * dw, 3)
-                rows.append(
-                    (
-                        int(mid), dw, dh, tiff_page_count(payload),
-                        len(np.unique(arr, axis=0)),
-                        int((arr == ca).all(axis=1).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_pages",
-                         "n_distinct_colors", "count_color_a"],
+        dw, dh, drgb = decode_tiff(payload)
+        arr = np.frombuffer(drgb, dtype=np.uint8).reshape(dh * dw, 3)
+        return [
+            (
+                mid, dw, dh, tiff_page_count(payload),
+                len(np.unique(arr, axis=0)),
+                int((arr == ca).all(axis=1).sum()),
             )
+        ]
 
-    return docs.mapInPandas(
+    return multimodal.map_rows(
+        docs,
         roundtrip,
         "media_id long, width int, height int, n_pages int, "
         "n_distinct_colors int, count_color_a long",
@@ -1307,24 +1134,13 @@ def _multimodal_frame_sample_dib(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
 
-    def synth(batches):
-        import pandas as pd
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_avi import (
+        encode_avi_dib,
+    )
 
-        from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.multimodal_avi import (
-            encode_avi_dib,
-        )
+    def synth(mid, nf, w, h, c):
+        frame = bytes([c]) * (w * h * 3)
+        return [(mid, encode_avi_dib(w, h, [frame] * nf, fps=10))]
 
-        for pdf in batches:
-            rows = []
-            for mid, nf, w, h, c in zip(
-                pdf["media_id"], pdf["nf"], pdf["w"], pdf["h"], pdf["c"]
-            ):
-                w, h = int(w), int(h)
-                frame = bytes([int(c)]) * (w * h * 3)
-                rows.append(
-                    (int(mid), encode_avi_dib(w, h, [frame] * int(nf), fps=10))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(synth, "media_id long, payload binary")
+    media = multimodal.map_rows(docs, synth, "media_id long, payload binary")
     return multimodal.sample_frames_mjpeg(media, every_ms=200)

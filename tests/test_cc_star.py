@@ -147,6 +147,49 @@ def test_star_survivors_composition(spark):
     }
     assert kept == {0, 3, 4, 7, 8, 9, 10, 11}
 
+
+def _union_find(vertices, edge_list):
+    parent = {v: v for v in vertices}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edge_list:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in vertices}
+
+
+@pytest.mark.parametrize(
+    "node_ids, edge_list",
+    [
+        # dangling endpoints 100/101 inside a 5-vertex chain: on the
+        # round they first receive a label nothing else changes
+        ([1, 2, 3, 4], [(1, 100), (100, 2), (2, 101), (101, 3)]),
+        # the dangling endpoint 0 is the component minimum
+        ([10, 20, 30], [(10, 0), (0, 20), (20, 5), (5, 30)]),
+    ],
+    ids=["dangling_mid_chain", "dangling_minimum"],
+)
+def test_dangling_edge_endpoints_match_union_find(spark, node_ids, edge_list):
+    """Edge endpoints missing from ``nodes`` are ordinary vertices of
+    the component graph for both CC forms: labels equal a union-find
+    over the same edges. Min-label also returns a row for each
+    dangling endpoint; the star form returns rows for ``nodes`` only."""
+    nodes = spark.createDataFrame([(i,) for i in node_ids], "id long")
+    edges = spark.createDataFrame(edge_list, "id_a long, id_b long")
+    vertices = set(node_ids) | {v for e in edge_list for v in e}
+    want = _union_find(vertices, edge_list)
+    stats = {}
+    assert _labels(DD.connected_components(nodes, edges, stats=stats)) == want
+    assert stats["converged"]
+    assert _labels(DD.connected_components_star(nodes, edges)) == {
+        i: want[i] for i in node_ids
+    }
+
 # round-13: GATE-covered heavy suite — deselected from the default
 # (driver-budget) collection, runs via tools/round_gate.py / -m 'slow or not slow'
 pytestmark = pytest.mark.slow

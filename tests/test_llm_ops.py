@@ -644,8 +644,11 @@ def test_ivf_append_equals_rebuild_with_same_centroids(spark, sf_dir, tmp_path):
 
 def test_ivf_probe_prunes_cell_partitions(spark, sf_dir, tmp_path):
     """Scale contract: the probe's cells scan must carry the probed
-    cells as PARTITION filters (directory pruning), not a post-scan
-    data filter over everything."""
+    cells as a DYNAMIC partition filter (directory pruning driven by
+    the probed-cell side of the join), not a post-scan data filter
+    over everything. Without dynamic partition pruning the scan keeps
+    only ``isnotnull(cell)`` as a partition filter and reads every
+    cell."""
     emb = read_table(spark, sf_dir, "embeddings")
     cs = emb.filter(F.col("vec_id") < 16)
     path = str(tmp_path / "ivf")
@@ -664,9 +667,12 @@ def test_ivf_probe_prunes_cell_partitions(spark, sf_dir, tmp_path):
         b for b in plan.split("\n\n") if "/cells" in b and "Scan parquet" in b
     ]
     assert cells_scan, plan
-    assert "PartitionFilters: [cell" in cells_scan[0].replace(
-        "PartitionFilters: [cell#", "PartitionFilters: [cell"
-    ) or "cell IN" in cells_scan[0], cells_scan[0]
+    partition_filters = [
+        line for line in cells_scan[0].splitlines()
+        if line.startswith("PartitionFilters:")
+    ]
+    assert partition_filters, cells_scan[0]
+    assert "dynamicpruningexpression(cell#" in partition_filters[0], cells_scan[0]
 
 
 def test_ivf_empty_corpus_builds_probeable_empty_index(spark, sf_dir, tmp_path):

@@ -329,3 +329,54 @@ def test_encode_png_packed_validation():
         MM.encode_png_packed(1, 1, [0], bit_depth=3)
     with pytest.raises(ValueError):
         MM.encode_png_packed(1, 1, [0], bit_depth=1, palette=b"\x01\x02")
+
+
+# ---------------------------------------------------------------------------
+# map_rows: the one Arrow-batch boundary every codec stage goes through
+# ---------------------------------------------------------------------------
+
+
+def test_map_rows_int64_max_next_to_null_in_one_batch(spark):
+    """An int64 of 2^63-1 and a NULL in the SAME Arrow batch. A frame
+    built with pandas' dtype inference turns that column into float64,
+    which cannot hold 2^63-1, and the Arrow conversion fails; map_rows'
+    object-dtype columns carry both values unchanged."""
+    big = 2**63 - 1
+    df = spark.createDataFrame([(0,), (1,), (2,)], "k long").coalesce(1)
+    out = MM.map_rows(
+        df,
+        lambda k: [(k, None if k == 1 else big - k)],
+        "k long, h long",
+    )
+    assert sorted(out.collect()) == [(0, big), (1, None), (2, big - 2)]
+
+
+def test_map_rows_binary_round_trips_byte_identical(spark):
+    payloads = [bytes(range(256)), b"", b"\x00\xff" * 1000, None]
+    df = spark.createDataFrame(
+        list(enumerate(payloads)), "id long, payload binary"
+    ).coalesce(1)
+    out = MM.map_rows(df, lambda i, p: [(i, p)], "id long, payload binary")
+    got = {r["id"]: r["payload"] for r in out.collect()}
+    assert got == dict(enumerate(payloads))
+
+
+def test_map_rows_empty_partitions(spark):
+    """Empty input partitions (and a fully empty input) yield no rows
+    and keep the declared schema, whatever ``fn`` would return."""
+    df = spark.range(3, numPartitions=8)
+    schema = "id long, feature array<double>"
+    out = MM.map_rows(df, lambda i: [(i, [float(i), 0.5])], schema)
+    assert sorted(out.collect()) == [(i, [float(i), 0.5]) for i in range(3)]
+    empty = MM.map_rows(df.filter(F.lit(False)), lambda i: [(i, [1.0])], schema)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == "struct<id:bigint,feature:array<double>>"
+
+
+def test_map_rows_drops_and_fans_out(spark):
+    """``fn`` returns ``[]`` to drop a row and several rows to fan out."""
+    df = spark.createDataFrame([(0,), (1,), (3,)], "n int").coalesce(1)
+    out = MM.map_rows(
+        df, lambda n: [(n, j) for j in range(n)], "n int, j int"
+    )
+    assert sorted(out.collect()) == [(1, 0), (3, 0), (3, 1), (3, 2)]
