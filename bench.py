@@ -291,6 +291,22 @@ HEADLINE = [
 ]
 
 
+def full_map_name(env=os.environ) -> str:
+    """File name of the per-query map this run persists: the canonical
+    ``BENCH_FULL.json`` only for a full run at the default core count
+    (``SPARK_GRAFT_CPUS`` unset or equal to the session default), so a
+    scaling run or a ``SPARK_GRAFT_BENCH_ONLY`` subset never replaces
+    the full map — those land in ``BENCH_FULL_c{cpus}.json`` and/or a
+    ``_subset``-suffixed file instead."""
+    stem = "BENCH_FULL"
+    cpus = env.get("SPARK_GRAFT_CPUS", "").strip()
+    if cpus and int(cpus) != (os.cpu_count() or 4):
+        stem += f"_c{int(cpus)}"
+    if env.get("SPARK_GRAFT_BENCH_ONLY", "").strip():
+        stem += "_subset"
+    return stem + ".json"
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -359,9 +375,8 @@ def main() -> None:
     # with a compact summary line — controls + worst-10 + total —
     # guaranteed to fit the captured tail whole.
     print(json.dumps(out))
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
-    )
+    full_name = full_map_name()
+    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), full_name)
     try:
         with open(full_path, "w") as f:
             json.dump(out, f, indent=1, sort_keys=True)
@@ -382,7 +397,7 @@ def main() -> None:
         "sf": float(sf),
         "n_queries": len(timings),
         "queries_note": "worst-10 + controls; full per-query map in "
-                        "BENCH_FULL.json (also printed above)",
+                        f"{full_name} (also printed above)",
     }
     line = json.dumps(summary)
     assert len(line) < 1900, f"summary line too long ({len(line)})"

@@ -1811,17 +1811,38 @@ def extract_spectral_features(
 # --------------------------------------------------------------------------
 
 
+def _phash_layout():
+    """The index's two tables: ``hashes`` (media_id, phash) and its
+    per-id expansion ``chunks``, partitioned by ``chunk``."""
+    from .operators.index_store import TwoTableIndex
+
+    return TwoTableIndex(
+        primary="hashes",
+        derived="chunks",
+        primary_id="media_id",
+        part_col="chunk",
+        derived_ddl="h long, chunk int, val long",
+    )
+
+
+def _chunk_expander(n_chunks: int):
+    """hashes rows → chunks rows (``dedup.hash_chunk_entries``)."""
+    from .operators.dedup import hash_chunk_entries
+
+    return lambda fp: hash_chunk_entries(
+        fp, id_col="media_id", hash_col="phash", n_chunks=n_chunks
+    )
+
+
 def phash_index_exists(spark, path: str) -> bool:
     """True iff a persisted pHash index exists at ``path`` — presence
     of its ``hashes`` table (written first, so it exists for any index
     in any state including a torn append). Same explicit-existence
     policy as ``dedup.lsh_index_exists``: a transient read failure
     must surface, never masquerade as "no index yet"."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(f"{path}/hashes")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
+    from .operators.index_store import path_exists
+
+    return path_exists(spark, f"{path}/hashes")
 
 
 def build_phash_index(
@@ -1845,100 +1866,34 @@ def build_phash_index(
     detectable torn state; :func:`verify_phash_index` reports it and
     :func:`repair_phash_index` re-expands from hashes (a cheap
     projection — pixels are never needed again)."""
-    from .operators.dedup import hash_chunk_entries
-
-    spark = media.sparkSession
     fp = (
         fingerprints
         if fingerprints is not None
         else phash_images(media).filter(F.col("phash").isNotNull())
     )
-    fp.write.mode(mode).parquet(f"{path}/hashes")
-    if fingerprints is not None:
-        shard_fp = fingerprints
-    else:
-        # derive chunks from the JUST-WRITTEN hashes: the expensive
-        # decode+DCT ran once for the hash write; the chunk write is a
-        # cheap projection over its output
-        shard_fp = spark.read.parquet(f"{path}/hashes")
-        if mode == "append":
-            shard_fp = shard_fp.join(
-                F.broadcast(
-                    media.select(F.col("media_id").alias("probe_id"))
-                ),
-                F.col("media_id") == F.col("probe_id"),
-                "semi",
-            )
-    hash_chunk_entries(
-        shard_fp, id_col="media_id", hash_col="phash", n_chunks=n_chunks
-    ).write.mode(mode).partitionBy("chunk").parquet(f"{path}/chunks")
+    _phash_layout().write(
+        path,
+        fp,
+        _chunk_expander(n_chunks),
+        mode,
+        None if fingerprints is not None else media.select("media_id"),
+    )
 
 
 def read_phash_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
     """(hashes, chunks) frames of a persisted index, with the exact
-    schemas ``hash_chunk_entries`` produces (chunk is
-    partition-encoded; cast back to int for join parity). An index
-    built from an EMPTY corpus has a chunks dir with no partition
-    directories (a partitioned write of zero rows emits no files), so
-    schema inference has nothing to read — that ONE case (checked
-    explicitly: no ``chunk=*`` subdirectories) falls back to an empty
-    typed frame. Every other failure propagates — a blanket fallback
-    would silently answer "no corpus candidates" and turn an
-    infrastructure fault into a wrong dedup result (same policy as
-    ``dedup.read_lsh_index``)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    chunks_dir = hpath(f"{path}/chunks")
-    fs = chunks_dir.getFileSystem(spark._jsc.hadoopConfiguration())
-    hashes = spark.read.parquet(f"{path}/hashes")
-    has_partitions = fs.exists(chunks_dir) and any(
-        st.isDirectory() and st.getPath().getName().startswith("chunk=")
-        for st in fs.listStatus(chunks_dir)
-    )
-    if has_partitions:
-        chunks = spark.read.parquet(f"{path}/chunks").select(
-            "id", "h", F.col("chunk").cast("int").alias("chunk"), "val"
-        )
-    else:
-        id_type = hashes.schema["media_id"].dataType.simpleString()
-        chunks = spark.createDataFrame(
-            [], f"id {id_type}, h long, chunk int, val long"
-        )
-    return hashes, chunks
+    schemas ``hash_chunk_entries`` produces. An index built from an
+    EMPTY corpus reads an empty chunks frame; every other failure
+    propagates (same policy as ``dedup.read_lsh_index``)."""
+    return _phash_layout().read(spark, path)
 
 
 def verify_phash_index(spark, path: str, n_chunks: int = 4) -> dict:
     """Consistency report: every hash id must carry exactly
-    ``n_chunks`` chunk entries and every chunk id a hash. One scan of
+    ``n_chunks`` chunk entries and every chunk id a hash
+    (:meth:`.operators.index_store.TwoTableIndex.verify`). One scan of
     each table — run on recovery/startup, not per batch."""
-    hashes, chunks = read_phash_index(spark, path)
-    per_id = chunks.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    joined = (
-        hashes.select(F.col("media_id").alias("id"))
-        .join(per_id, "id", "left")
-        .agg(
-            F.count(F.lit(1)).alias("n_hashes"),
-            F.sum(F.when(F.col("n").isNull(), 1).otherwise(0)).alias("missing"),
-            F.sum(
-                F.when(
-                    F.col("n").isNotNull() & (F.col("n") != n_chunks), 1
-                ).otherwise(0)
-            ).alias("incomplete"),
-        )
-        .first()
-    )
-    orphans = per_id.join(
-        hashes.select(F.col("media_id").alias("id")), "id", "left_anti"
-    ).count()
-    missing = int(joined["missing"] or 0)
-    incomplete = int(joined["incomplete"] or 0)
-    return {
-        "hashes": int(joined["n_hashes"]),
-        "missing_chunk_ids": missing,
-        "incomplete_chunk_ids": incomplete,
-        "orphan_chunk_ids": int(orphans),
-        "consistent": missing == 0 and incomplete == 0 and orphans == 0,
-    }
+    return _phash_layout().verify(spark, path, n_chunks)
 
 
 def repair_phash_index(spark, path: str, n_chunks: int = 4) -> dict:
@@ -1946,32 +1901,9 @@ def repair_phash_index(spark, path: str, n_chunks: int = 4) -> dict:
     append), or the whole chunks table for pathological states —
     always sound because chunks are a pure function of hashes.
     Idempotent; returns the post-repair verify report."""
-    from .operators.dedup import hash_chunk_entries
-    from .sources.io import replace_parquet_atomic
-
-    report = verify_phash_index(spark, path, n_chunks)
-    if report["consistent"]:
-        return report
-    hashes, chunks = read_phash_index(spark, path)
-    if report["incomplete_chunk_ids"] or report["orphan_chunk_ids"]:
-        replace_parquet_atomic(
-            spark,
-            hash_chunk_entries(
-                hashes, id_col="media_id", hash_col="phash", n_chunks=n_chunks
-            ),
-            f"{path}/chunks",
-            partition_by=["chunk"],
-        )
-    else:
-        missing = hashes.join(
-            chunks.select("id").dropDuplicates(["id"]),
-            hashes["media_id"] == F.col("id"),
-            "left_anti",
-        )
-        hash_chunk_entries(
-            missing, id_col="media_id", hash_col="phash", n_chunks=n_chunks
-        ).write.mode("append").partitionBy("chunk").parquet(f"{path}/chunks")
-    return verify_phash_index(spark, path, n_chunks)
+    return _phash_layout().repair(
+        spark, path, _chunk_expander(n_chunks), n_chunks
+    )
 
 
 def incremental_phash_pairs(

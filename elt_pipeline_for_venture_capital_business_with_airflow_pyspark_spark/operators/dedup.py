@@ -25,12 +25,11 @@ linear; everything shuffles on hash keys → uniform partitioning.
 
 from __future__ import annotations
 
-import json as _json
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
+from . import index_store as IS
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -1334,14 +1333,13 @@ def _sig_fn(signature: str):
     raise ValueError(f"unknown signature family: {signature!r}")
 
 
-def _index_fs(spark, path: str):
-    """(jvm, Path-class, FileSystem) for an index root — the same
-    hadoop-FS triple :mod:`..sources.io` uses for versioned tables."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, hpath, fs
+_LSH = IS.TwoTableIndex(
+    primary="signatures",
+    derived="bands",
+    primary_id="id",
+    part_col="band",
+    derived_ddl="band int, bucket long",
+)
 
 
 def lsh_index_exists(spark, path: str) -> bool:
@@ -1352,36 +1350,7 @@ def lsh_index_exists(spark, path: str) -> bool:
     try/except around a read: a transient read failure on a real
     index must surface as an error, never masquerade as "no index
     yet" (that misread would re-bootstrap and corrupt the corpus)."""
-    _, hpath, fs = _index_fs(spark, path)
-    return bool(fs.exists(hpath(f"{path}/signatures")))
-
-
-def _write_lsh_meta(spark, path: str, meta: dict) -> None:
-    """Persist index parameters as a one-line JSON under
-    ``<path>/meta`` — written via :func:`..sources.io.write_small_text`
-    (direct FileSystem stream: the text SINK pays ~4.5 s of fixed job
-    overhead per write in this Spark build; the stream write is ~0.02 s
-    and object stores work identically). Read side unchanged
-    (``spark.read.text``). NOT underscore-prefixed: Spark's file index
-    treats ``_*`` paths as hidden and silently ignores them, which
-    would make the metadata unreadable by the very reader that wrote
-    it. The name cannot collide with data — signatures and bands are
-    read via their explicit subpaths, never by sweeping the index
-    root."""
-    from ..sources.io import write_small_text
-
-    write_small_text(spark, f"{path}/meta", _json.dumps(meta, sort_keys=True))
-
-
-def read_lsh_meta(spark, path: str) -> dict | None:
-    """Index parameters written by :func:`build_lsh_index` (k,
-    num_hashes, bands, signature family), or None for a pre-metadata
-    index (repair then needs explicit parameters)."""
-    _, hpath, fs = _index_fs(spark, path)
-    if not fs.exists(hpath(f"{path}/meta")):
-        return None
-    rows = spark.read.text(f"{path}/meta").collect()
-    return _json.loads(rows[0]["value"]) if rows else None
+    return IS.path_exists(spark, f"{path}/signatures")
 
 
 def build_lsh_index(
@@ -1398,7 +1367,9 @@ def build_lsh_index(
 ) -> None:
     """Persist a corpus LSH index: ``<path>/signatures`` (id,
     signature) and ``<path>/bands`` (id, band, bucket), the state an
-    *incremental* dedup pipeline carries between runs.
+    *incremental* dedup pipeline carries between runs, plus
+    ``<path>/meta`` (k, num_hashes, bands, signature family — read it
+    with :func:`.index_store.read_index_meta`).
 
     A daily 100-TB pipeline does not re-shingle its whole corpus per
     run (the reference's own cadence is daily incremental slices —
@@ -1434,152 +1405,69 @@ def build_lsh_index(
         if signatures is not None
         else _sig_fn(signature)(docs, id_col, text_col, k, num_hashes)
     )
-    sig.write.mode(mode).parquet(f"{path}/signatures")
-    if signatures is not None:
-        # caller persisted the frame: band-expand it directly
-        shard_sig = signatures
-    else:
-        # derive band entries from the JUST-WRITTEN signatures, not the
-        # live plan: the expensive shingle→sign pipeline runs once (for
-        # the signature write); the band write is then a cheap projection
-        # over the parquet it produced
-        shard_sig = spark.read.parquet(f"{path}/signatures")
-        if mode == "append":
-            # the signatures dir now holds corpus + shard; band-expand
-            # only the appended shard rows
-            shard_sig = shard_sig.join(
-                F.broadcast(docs.select(F.col(id_col).alias("id"))), "id", "semi"
-            )
-    band_entries(shard_sig, num_hashes, bands).write.mode(
-        mode
-    ).partitionBy("band").parquet(f"{path}/bands")
+    _LSH.write(
+        path,
+        sig,
+        lambda s: band_entries(s, num_hashes, bands),
+        mode,
+        None if signatures is not None
+        else docs.select(F.col(id_col).alias("id")),
+    )
     meta = {
         "k": k,
         "num_hashes": num_hashes,
         "bands": bands,
         "signature": signature,
     }
-    if mode != "append" or read_lsh_meta(spark, path) is None:
-        _write_lsh_meta(spark, path, meta)
+    if mode != "append" or IS.read_index_meta(spark, path) is None:
+        IS.write_index_meta(spark, path, meta)
 
 
 def read_lsh_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
     """Load a persisted LSH index → ``(signatures, bands)`` frames
-    with the exact schemas :func:`band_entries` produces (band is
-    partition-encoded; cast back to int for join parity). An index
-    built from an EMPTY corpus has a bands dir with no partition
-    directories at all (a partitioned write of zero rows emits no
-    files), so schema inference has nothing to read — that ONE case
-    (checked explicitly: no ``band=*`` subdirectories) falls back to
-    an empty frame typed off the signatures schema. Every other
-    failure — corrupt footer, permissions, transient FS error, typo'd
-    path — propagates: a blanket fallback here would silently answer
-    "no corpus candidates" and turn an infrastructure fault into a
-    wrong dedup result."""
-    _, hpath, fs = _index_fs(spark, path)
-    sig = spark.read.parquet(f"{path}/signatures")
-    bands_dir = hpath(f"{path}/bands")
-    has_partitions = fs.exists(bands_dir) and any(
-        st.isDirectory() and st.getPath().getName().startswith("band=")
-        for st in fs.listStatus(bands_dir)
-    )
-    if has_partitions:
-        bands = spark.read.parquet(f"{path}/bands").select(
-            "id", F.col("band").cast("int").alias("band"), "bucket"
-        )
-    else:
-        id_type = sig.schema["id"].dataType.simpleString()
-        bands = spark.createDataFrame(
-            [], f"id {id_type}, band int, bucket long"
-        )
-    return sig, bands
+    with the exact schemas :func:`band_entries` produces. An index
+    built from an EMPTY corpus reads an empty bands frame; every other
+    failure propagates (:func:`.index_store.read_partitioned`) — a
+    blanket fallback here would silently answer "no corpus candidates"
+    and turn an infrastructure fault into a wrong dedup result."""
+    return _LSH.read(spark, path)
+
+
+def _lsh_params(spark, path: str, missing: str) -> tuple[int, int]:
+    """``(num_hashes, bands)`` from the index meta; raises with
+    ``missing`` appended when the index has none."""
+    meta = IS.read_index_meta(spark, path)
+    if meta is None:
+        raise ValueError(f"LSH index at {path} has no meta {missing}")
+    return int(meta["num_hashes"]), int(meta["bands"])
 
 
 def verify_lsh_index(spark, path: str, bands: int | None = None) -> dict:
-    """Consistency report for a persisted LSH index. The signatures
-    table is the source of truth (:func:`build_lsh_index` commits it
-    first), so the torn-append states are:
-
-    - ``missing_band_ids`` — signature ids with NO band entries (the
-      crash-between-writes state; probes silently never surface these
-      docs as candidates);
-    - ``incomplete_band_ids`` — ids with some but not ``bands``
-      entries (not producible by the job-level commit, would indicate
-      task-level tearing or external edits);
-    - ``orphan_band_ids`` — band entries whose id has no signature
-      (scoring would drop them; also not producible by write order).
-
-    ``consistent`` is True iff all three are zero. Cost: one scan of
-    each table — run on recovery/startup, not per batch."""
-    meta = read_lsh_meta(spark, path)
+    """Consistency report for a persisted LSH index
+    (:meth:`.index_store.TwoTableIndex.verify`): the signatures table
+    is the source of truth, and ``missing_band_ids`` /
+    ``incomplete_band_ids`` / ``orphan_band_ids`` count the torn-append
+    states, with ``bands_per_id`` the expected entries per id (from
+    meta unless ``bands`` is given)."""
     if bands is None:
-        if meta is None:
-            raise ValueError(
-                f"LSH index at {path} has no _meta and no explicit "
-                "bands= was given"
-            )
-        bands = int(meta["bands"])
-    sig, bands_df = read_lsh_index(spark, path)
-    per_id = bands_df.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    joined = sig.select("id").join(per_id, "id", "left").select("n")
-    counts = joined.agg(
-        F.count(F.lit(1)).alias("n_sig"),
-        F.sum(F.when(F.col("n").isNull(), 1).otherwise(0)).alias("missing"),
-        F.sum(
-            F.when(F.col("n").isNotNull() & (F.col("n") != bands), 1).otherwise(0)
-        ).alias("incomplete"),
-    ).first()
-    orphans = per_id.join(sig.select("id"), "id", "left_anti").count()
-    missing = int(counts["missing"] or 0)
-    incomplete = int(counts["incomplete"] or 0)
-    return {
-        "signatures": int(counts["n_sig"]),
-        "missing_band_ids": missing,
-        "incomplete_band_ids": incomplete,
-        "orphan_band_ids": int(orphans),
-        "bands_per_id": bands,
-        "consistent": missing == 0 and incomplete == 0 and orphans == 0,
-    }
+        bands = _lsh_params(spark, path, "and no explicit bands= was given")[1]
+    return {**_LSH.verify(spark, path, bands), "bands_per_id": bands}
 
 
 def repair_lsh_index(spark, path: str) -> dict:
-    """Repair a torn append so probe correctness is restored:
-    signature ids missing their band entries are re-expanded from the
-    persisted signatures (a cheap projection — no re-shingling) and
-    appended; the pathological states (incomplete/orphan entries)
-    rebuild the whole bands table from signatures, which is always
-    sound because bands are a pure function of signatures. Idempotent,
-    and preserves ``incremental == full``: the repaired index is
-    content-identical to one whose appends never tore. Returns the
-    post-repair :func:`verify_lsh_index` report."""
-    meta = read_lsh_meta(spark, path)
-    if meta is None:
-        raise ValueError(
-            f"LSH index at {path} has no _meta — rebuild it with "
-            "build_lsh_index(mode='overwrite')"
-        )
-    num_hashes, n_bands = int(meta["num_hashes"]), int(meta["bands"])
-    report = verify_lsh_index(spark, path, bands=n_bands)
-    if report["consistent"]:
-        return report
-    sig, bands_df = read_lsh_index(spark, path)
-    if report["incomplete_band_ids"] or report["orphan_band_ids"]:
-        from ..sources.io import replace_parquet_atomic
-
-        replace_parquet_atomic(
-            spark,
-            band_entries(sig, num_hashes, n_bands),
-            f"{path}/bands",
-            partition_by=["band"],
-        )
-    else:
-        missing_sig = sig.join(
-            bands_df.select("id").dropDuplicates(["id"]), "id", "left_anti"
-        )
-        band_entries(missing_sig, num_hashes, n_bands).write.mode(
-            "append"
-        ).partitionBy("band").parquet(f"{path}/bands")
-    return verify_lsh_index(spark, path, bands=n_bands)
+    """Repair a torn append so probe correctness is restored: band
+    entries are re-expanded from the persisted signatures (a cheap
+    projection — no re-shingling), see
+    :meth:`.index_store.TwoTableIndex.repair`. Idempotent, and
+    preserves ``incremental == full``. Returns the post-repair
+    :func:`verify_lsh_index` report."""
+    num_hashes, n_bands = _lsh_params(
+        spark, path, "— rebuild it with build_lsh_index(mode='overwrite')"
+    )
+    report = _LSH.repair(
+        spark, path, lambda s: band_entries(s, num_hashes, n_bands), n_bands
+    )
+    return {**report, "bands_per_id": n_bands}
 
 
 def compact_lsh_index(

@@ -56,9 +56,9 @@ the overflow is a documented knob, not a surprise.
 
 from __future__ import annotations
 
-import json as _json
-
 from pyspark.sql import DataFrame, functions as F
+
+from . import index_store as IS
 
 __all__ = [
     "lm_score_stupid_backoff",
@@ -67,7 +67,6 @@ __all__ = [
     "lm_index_append",
     "lm_index_read",
     "lm_index_score",
-    "read_lm_meta",
 ]
 
 # fixed-point exponent for the backoff fraction and mantissa width of
@@ -474,35 +473,6 @@ def lm_score_kneser_ney(
 # ---------------------------------------------------------------------------
 
 
-def _lm_fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, hpath, fs
-
-
-def _write_lm_meta(spark, path: str, meta: dict) -> None:
-    """One-line JSON under ``<path>/meta`` (same direct-stream write
-    as the LSH index's metadata — the text SINK costs ~4.5 s per write
-    — and same naming rule: NOT underscore-prefixed, Spark hides
-    ``_*`` paths from its readers)."""
-    from ..sources.io import write_small_text
-
-    write_small_text(spark, f"{path}/meta", _json.dumps(meta, sort_keys=True))
-
-
-def read_lm_meta(spark, path: str) -> dict | None:
-    """Index parameters + tokenizer contract, or None if no index has
-    been committed at ``path`` (build writes meta LAST, so its
-    presence certifies all three count tables landed)."""
-    _, hpath, fs = _lm_fs(spark, path)
-    if not fs.exists(hpath(f"{path}/meta")):
-        return None
-    rows = spark.read.text(f"{path}/meta").collect()
-    return _json.loads(rows[0]["value"]) if rows else None
-
-
 def lm_index_build(
     train_docs: DataFrame,
     path: str,
@@ -528,7 +498,7 @@ def lm_index_build(
     uni.write.mode(mode).parquet(f"{path}/unigrams")
     bi.write.mode(mode).parquet(f"{path}/bigrams")
     tri.write.mode(mode).parquet(f"{path}/trigrams")
-    _write_lm_meta(
+    IS.write_index_meta(
         spark,
         path,
         {
@@ -546,8 +516,10 @@ def lm_index_read(
     """Load the persisted count tables → ``(uni, bi, tri)``. Raises
     if the index was never committed (meta absent) — a missing index
     must surface loudly, not as an empty LM that scores everything at
-    the OOV floor."""
-    if read_lm_meta(spark, path) is None:
+    the OOV floor. Meta is read with
+    :func:`.index_store.read_index_meta`; build writes it LAST, so its
+    presence certifies all three count tables landed."""
+    if IS.read_index_meta(spark, path) is None:
         raise ValueError(
             f"no committed LM index at {path} (meta absent) — run "
             "lm_index_build first"
@@ -565,10 +537,10 @@ def lm_index_append(
     """Fold a new shard's counts into the persisted index WITHOUT
     retraining: counts are additive, so the merge is three per-key
     summed unions (shard scan + count-table merge — never a corpus
-    rescan). Each table is swapped via
-    :func:`..sources.io.replace_parquet_atomic` (the plans read the
-    same paths they replace); tables merge in trigram→bigram→unigram
-    order and meta stays untouched, so a crash mid-append leaves a
+    rescan). Each table is merged by
+    :func:`.index_store.merge_counts` (an atomic swap — the plans
+    read the same paths they replace); tables merge in
+    trigram→bigram→unigram order and meta stays untouched, so a crash mid-append leaves a
     detectable mixed state behind an intact meta — re-running the
     SAME append is NOT idempotent (counts would double); recovery is
     a rebuild, the same posture as the LSH index's repair path.
@@ -577,24 +549,12 @@ def lm_index_append(
     counts trained on corpus ∪ shard (per-key BIGINT sums), which the
     registry pins by hashing the appended index against an oracle
     that retrains from scratch."""
-    from ..sources.io import replace_parquet_atomic
-
-    spark = new_docs.sparkSession
-    uni0, bi0, tri0 = lm_index_read(spark, path)
+    uni0, bi0, tri0 = lm_index_read(new_docs.sparkSession, path)
     toks = new_docs.select(_tokens(text_col).alias("ts"))
     uni1, bi1, tri1 = _ngram_count_tables(toks)
-    tri_m = (
-        tri0.unionByName(tri1)
-        .groupBy("w2", "w1", "w")
-        .agg(F.sum("ct").alias("ct"))
-    )
-    replace_parquet_atomic(spark, tri_m, f"{path}/trigrams")
-    bi_m = (
-        bi0.unionByName(bi1).groupBy("w1", "w").agg(F.sum("cb").alias("cb"))
-    )
-    replace_parquet_atomic(spark, bi_m, f"{path}/bigrams")
-    uni_m = uni0.unionByName(uni1).groupBy("w").agg(F.sum("cu").alias("cu"))
-    replace_parquet_atomic(spark, uni_m, f"{path}/unigrams")
+    IS.merge_counts(tri0, tri1, f"{path}/trigrams", ["ct"])
+    IS.merge_counts(bi0, bi1, f"{path}/bigrams", ["cb"])
+    IS.merge_counts(uni0, uni1, f"{path}/unigrams", ["cu"])
 
 
 def lm_index_score(

@@ -1,9 +1,10 @@
 """Index upkeep policy: turn the small-file DIAGNOSTIC
-(``sources.io.table_file_stats``) and the small-file FIX
-(``dedup.compact_lsh_index`` / ``similarity.compact_ivf_index``) into
-the decision a long-running pipeline actually schedules —
-``maybe_compact_index`` runs after every daily append and compacts
-only when the file layout has genuinely degraded.
+(``sources.io.table_file_stats``) and the small-file FIX (the
+``sources.io`` compactors, applied per index table) into the decision
+a long-running pipeline actually schedules — ``maybe_compact_index``
+runs after every daily append and compacts only when the file layout
+has genuinely degraded. The index layout is recognized through the
+shared persisted-index substrate (``operators.index_store``).
 
 Why a policy and not a cron'd compaction: rewriting a 100-TB index
 every day costs a full read+write of the index for zero benefit, and
@@ -24,6 +25,7 @@ from pyspark.sql import SparkSession
 from ..sources import io as IO
 from . import dedup as DD
 from . import similarity as SIM
+from .index_store import path_exists
 
 __all__ = ["index_kind", "maybe_compact_index"]
 
@@ -33,17 +35,10 @@ def index_kind(spark: SparkSession, path: str) -> str:
     ``signatures``+``bands`` dirs, an IVF index ``centroids``+
     ``cells``). Raises ValueError on anything else — an unknown
     layout must never be 'maintained' by guesswork."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
-    def _exists(sub: str) -> bool:
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}")
-        return p.getFileSystem(conf).exists(p)
-
-    if _exists("signatures") and _exists("bands"):
-        return "lsh"
-    if _exists("centroids") and _exists("cells"):
-        return "ivf"
+    for kind, tables in (("lsh", ("signatures", "bands")),
+                         ("ivf", ("centroids", "cells"))):
+        if all(path_exists(spark, f"{path}/{t}") for t in tables):
+            return kind
     raise ValueError(
         f"{path} is neither an LSH (signatures/bands) nor an IVF "
         "(centroids/cells) index layout"

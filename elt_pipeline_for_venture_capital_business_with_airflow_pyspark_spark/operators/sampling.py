@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import index_store as IS
+
 __all__ = [
     "cap_per_group",
     "weighted_mix",
@@ -39,7 +41,6 @@ __all__ = [
     "dsir_index_read",
     "dsir_index_append",
     "dsir_score_from_index",
-    "read_dsir_meta",
 ]
 
 
@@ -709,30 +710,28 @@ def dsir_gumbel_topk(
 # meta-absent reads as "no index".
 
 
-def _dsir_fs(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    p = hpath(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, hpath, fs
-
-
-def _write_dsir_meta(spark, path: str, meta: dict) -> None:
-    import json as _json
-
-    from ..sources.io import write_small_text
-
-    write_small_text(spark, f"{path}/meta", _json.dumps(meta, sort_keys=True))
-
-
-def read_dsir_meta(spark, path: str) -> dict | None:
-    import json as _json
-
-    _, hpath, fs = _dsir_fs(spark, path)
-    if not fs.exists(hpath(f"{path}/meta")):
-        return None
-    rows = spark.read.text(f"{path}/meta").collect()
-    return _json.loads(rows[0]["value"]) if rows else None
+def _dsir_bucket_table(
+    df: DataFrame,
+    target_pred: F.Column,
+    id_col: str,
+    text_col: str,
+    n_buckets: int,
+    k: int,
+) -> DataFrame:
+    """(b, tp, tq): per-bucket gram counts of the target (``tp``) and
+    the raw pool (``tq``) — the persisted DSIR state of one corpus or
+    shard."""
+    base = df.filter(F.col(id_col).isNotNull()).withColumn(
+        "__t", F.coalesce(target_pred, F.lit(False))
+    )
+    return (
+        _dsir_bucket_counts(base, id_col, text_col, n_buckets, k, carry=("__t",))
+        .groupBy("b")
+        .agg(
+            F.sum(F.when(F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tp"),
+            F.sum(F.when(~F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tq"),
+        )
+    )
 
 
 def dsir_index_build(
@@ -749,21 +748,11 @@ def dsir_index_build(
     (b, tp, tq) + ``<path>/meta`` (featurizer contract, written LAST
     so a torn build reads as no-index). One corpus pass; the stored
     table is ≤ n_buckets rows no matter the corpus size."""
-    spark = df.sparkSession
-    base = df.filter(F.col(id_col).isNotNull()).withColumn(
-        "__t", F.coalesce(target_pred, F.lit(False))
-    )
-    bt = (
-        _dsir_bucket_counts(base, id_col, text_col, n_buckets, k, carry=("__t",))
-        .groupBy("b")
-        .agg(
-            F.sum(F.when(F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tp"),
-            F.sum(F.when(~F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tq"),
-        )
-    )
-    bt.write.mode(mode).parquet(f"{path}/buckets")
-    _write_dsir_meta(
-        spark,
+    _dsir_bucket_table(
+        df, target_pred, id_col, text_col, n_buckets, k
+    ).write.mode(mode).parquet(f"{path}/buckets")
+    IS.write_index_meta(
+        df.sparkSession,
         path,
         {"featurizer": "char3_poly31_alnum", "n_buckets": n_buckets, "k": k},
     )
@@ -773,7 +762,7 @@ def dsir_index_read(spark, path: str) -> tuple[DataFrame, dict]:
     """(bucket table, meta) — raises if never committed: a missing
     distribution must surface loudly, not as an all-zero prior that
     weights every doc identically."""
-    meta = read_dsir_meta(spark, path)
+    meta = IS.read_index_meta(spark, path)
     if meta is None:
         raise ValueError(
             f"no committed DSIR index at {path} (meta absent) — run "
@@ -792,36 +781,18 @@ def dsir_index_append(
     """Fold a new shard's bucket counts into the persisted
     distributions WITHOUT re-featurizing the pool: counts are
     additive, so the merge is one per-bucket summed union (shard scan
-    + a ≤n_buckets-row merge), swapped atomically. Incremental ==
-    full, exactly — merged counts are bit-identical to building on
-    corpus ∪ shard, which the registry pins by hashing the appended
-    index against an oracle that refeaturizes from scratch. Re-running
+    + a ≤n_buckets-row merge, :func:`.index_store.merge_counts`),
+    swapped atomically. Incremental == full, exactly — merged counts
+    are bit-identical to building on corpus ∪ shard, which the
+    registry pins by hashing the appended index against an oracle
+    that refeaturizes from scratch. Re-running
     the SAME append doubles counts (the LM/LSH posture: recovery is a
     rebuild); meta stays untouched."""
-    from ..sources.io import replace_parquet_atomic
-
-    spark = df.sparkSession
-    bt0, meta = dsir_index_read(spark, path)
-    base = df.filter(F.col(id_col).isNotNull()).withColumn(
-        "__t", F.coalesce(target_pred, F.lit(False))
+    bt0, meta = dsir_index_read(df.sparkSession, path)
+    bt1 = _dsir_bucket_table(
+        df, target_pred, id_col, text_col, int(meta["n_buckets"]), int(meta["k"])
     )
-    bt1 = (
-        _dsir_bucket_counts(
-            base, id_col, text_col, int(meta["n_buckets"]), int(meta["k"]),
-            carry=("__t",),
-        )
-        .groupBy("b")
-        .agg(
-            F.sum(F.when(F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tp"),
-            F.sum(F.when(~F.col("__t"), F.col("c")).otherwise(F.lit(0))).alias("tq"),
-        )
-    )
-    merged = (
-        bt0.unionByName(bt1)
-        .groupBy("b")
-        .agg(F.sum("tp").alias("tp"), F.sum("tq").alias("tq"))
-    )
-    replace_parquet_atomic(spark, merged, f"{path}/buckets")
+    IS.merge_counts(bt0, bt1, f"{path}/buckets", ["tp", "tq"])
 
 
 def dsir_score_from_index(

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import index_store as IS
+
 __all__ = [
     "hll_partials",
     "hll_rollup",
@@ -805,24 +807,17 @@ def hll_index_window_estimate(
     independent of raw-data size — the query shape that replaces
     recounting history at 100 TB."""
     # a register table built from an EMPTY corpus has no day=…
-    # partition directories at all (a partitioned write of zero rows
-    # emits no files) — that ONE case (checked explicitly, same
-    # convention as dedup.read_lsh_index) yields an empty register
-    # frame; every other read failure propagates.
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    rdir = hpath(f"{path}/registers")
-    fs = rdir.getFileSystem(spark._jsc.hadoopConfiguration())
-    has_partitions = fs.exists(rdir) and any(
-        st.isDirectory() and st.getPath().getName().startswith(f"{day_col}=")
-        for st in fs.listStatus(rdir)
+    # partition directories at all — that ONE case yields an empty
+    # register frame (index_store.read_partitioned); every other read
+    # failure propagates.
+    regs = IS.read_partitioned(
+        spark,
+        f"{path}/registers",
+        day_col,
+        f"bucket bigint, r int, `{day_col}` string",
+    ).filter(
+        (F.col(day_col) >= F.lit(start)) & (F.col(day_col) <= F.lit(end))
     )
-    if has_partitions:
-        regs = spark.read.parquet(f"{path}/registers").filter(
-            (F.col(day_col) >= F.lit(start)) & (F.col(day_col) <= F.lit(end))
-        )
-    else:
-        regs = spark.createDataFrame([], "bucket bigint, r int")
     merged = regs.groupBy("bucket").agg(F.max("r").alias("r"))
     return hll_det_estimate(merged, [], m=m)
 

@@ -64,6 +64,9 @@ from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operat
     graph as GR,
 )
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
+    index_store as IS,
+)
+from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
     lm as LM,
 )
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (

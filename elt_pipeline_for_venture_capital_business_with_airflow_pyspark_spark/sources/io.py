@@ -264,6 +264,16 @@ def write_csv(
     ).csv(path)
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(Path class, FileSystem)`` for ``path`` — the one Hadoop
+    FileSystem lookup behind every direct metadata step in the engine
+    (existence checks, listings, renames, small-file streams). Going
+    through the session's Hadoop configuration means object stores and
+    HDFS resolve exactly like Spark's own readers and writers."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    return hpath, hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def write_small_text(spark: SparkSession, dir_path: str, content: str) -> None:
     """One-line text "table" written via a direct FileSystem stream +
     temp-file rename, readable by ``spark.read.text(dir_path)`` exactly
@@ -271,17 +281,15 @@ def write_small_text(spark: SparkSession, dir_path: str, content: str) -> None:
     hidden names). Exists because the text SINK pays ~4.5 s of fixed
     job overhead per write in this Spark build where a direct stream
     costs ~0.02 s (measured; parquet/json/csv sinks are ~0.5 s — the
-    pathology is text-sink-specific) — and index metas are written
-    once per build across four lifecycle families. Same FileSystem
-    API the version-pointer plumbing uses, so object stores work
-    unchanged. Overwrite semantics: the dir is deleted first, so a
-    crash mid-write leaves either no dir or a hidden temp — both read
-    as "no meta", preserving every index's meta-commits-LAST
+    pathology is text-sink-specific) — and every persisted index's
+    ``meta`` goes through it (``operators.index_store.write_index_meta``).
+    Same FileSystem API the version-pointer plumbing uses, so object
+    stores work unchanged. Overwrite semantics: the dir is deleted
+    first, so a crash mid-write leaves either no dir or a hidden temp —
+    both read as "no meta", preserving every index's meta-commits-LAST
     durability contract."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath, fs = hadoop_fs(spark, dir_path)
     d = hpath(dir_path)
-    fs = d.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(d):
         fs.delete(d, True)
     fs.mkdirs(d)
@@ -371,10 +379,8 @@ def replace_parquet_atomic(
     immutable ``_versions/v{n}`` dirs and visibility is published by
     the tiny ``_LATEST`` pointer file, the manifest-pointer pattern
     object stores need."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath, fs = hadoop_fs(spark, path)
     jpath = hpath(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     staged, backup = hpath(path + "__swap_new"), hpath(path + "__swap_old")
 
     if fs.exists(staged):
@@ -410,9 +416,8 @@ def compact_parquet(
     count. The rewrite lands via :func:`replace_parquet_atomic`
     (rename swap), so the data is written once and a mid-compaction
     crash never destroys the original."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    hpath, fs = hadoop_fs(spark, path)
+    jpath = hpath(path)
     it = fs.listFiles(jpath, True)
     byte_total = 0
     while it.hasNext():
@@ -428,9 +433,8 @@ def compact_parquet(
 def parquet_file_count(spark: SparkSession, path: str) -> int:
     """Recursive data-file count under a table dir (parquet files
     only — markers/checksums skipped). Pure FS metadata, no job."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    hpath, fs = hadoop_fs(spark, path)
+    jpath = hpath(path)
     n = 0
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -460,9 +464,8 @@ def compact_partitioned_parquet(
     construction; lands via the same rename swap as
     :func:`replace_parquet_atomic` (see its object-store caveat).
     Returns the new file count."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    hpath, fs = hadoop_fs(spark, path)
+    jpath = hpath(path)
     byte_total = 0
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -626,9 +629,8 @@ def table_file_stats(spark: SparkSession, path: str) -> dict:
     scan; alert when ``mean_bytes`` falls well below the writer's
     target (e.g. <25% of 256 MB) and compact.
     """
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    hpath, fs = hadoop_fs(spark, path)
+    jpath = hpath(path)
     sizes = []
     it = fs.listFiles(jpath, True)
     while it.hasNext():
@@ -662,17 +664,9 @@ def _vname(version: int) -> str:
     return f"v{version:05d}"
 
 
-def _versions_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    base = hpath(path)
-    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
-    return jvm, hpath, fs
-
-
 def list_versions(spark: SparkSession, path: str) -> list[int]:
     """All committed snapshot versions of a versioned table, ascending."""
-    jvm, hpath, fs = _versions_fs(spark, path)
+    hpath, fs = hadoop_fs(spark, path)
     vdir = hpath(f"{path}/{_VERSIONS_DIR}")
     if not fs.exists(vdir):
         return []
@@ -692,7 +686,7 @@ def latest_version(spark: SparkSession, path: str) -> int | None:
     and valid, else the highest committed snapshot (pointer-loss
     recovery — a crash between pointer delete and rename cannot lose
     the table)."""
-    jvm, hpath, fs = _versions_fs(spark, path)
+    hpath, fs = hadoop_fs(spark, path)
     ptr = hpath(f"{path}/{_LATEST_FILE}")
     versions = list_versions(spark, path)
     if not versions:
@@ -717,7 +711,7 @@ def _point_latest(spark: SparkSession, path: str, version: int) -> None:
     highest-committed-version fallback (which only engages when no
     pointer exists at all). Falls back to delete-then-rename only on
     filesystems whose FileContext doesn't support overwriting rename."""
-    jvm, hpath, fs = _versions_fs(spark, path)
+    hpath, fs = hadoop_fs(spark, path)
     tmp = hpath(f"{path}/{_LATEST_FILE}__tmp")
     ptr = hpath(f"{path}/{_LATEST_FILE}")
     out = fs.create(tmp, True)
@@ -726,6 +720,7 @@ def _point_latest(spark: SparkSession, path: str, version: int) -> None:
     finally:
         out.close()
     try:
+        jvm = spark._jvm
         fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
             fs.getUri(), spark._jsc.hadoopConfiguration()
         )
@@ -813,7 +808,7 @@ def write_versioned(
     lost-update race a daily pipeline actually hits.
     """
     spark = df.sparkSession
-    jvm, hpath, fs = _versions_fs(spark, path)
+    hpath, fs = hadoop_fs(spark, path)
     if expected_parent is not _EXPECTED_UNSET:
         current = latest_version(spark, path)
         if current != expected_parent:
@@ -909,7 +904,7 @@ def vacuum_versioned(spark: SparkSession, path: str) -> list[str]:
     run vacuum from the single-writer owner, the same assumption the
     commit protocol already documents for reservation markers on
     object stores."""
-    jvm, hpath, fs = _versions_fs(spark, path)
+    hpath, fs = hadoop_fs(spark, path)
     vdir = hpath(f"{path}/{_VERSIONS_DIR}")
     deleted: list[str] = []
     if not fs.exists(vdir):

@@ -418,13 +418,14 @@ def streaming_incremental_dedup(
 
 def lsh_index_exists_safe(stream: DataFrame, index_path: str) -> bool:
     """Existence + repairability test used by ``repair_on_start``: an
-    index is repairable iff its signatures table AND _meta exist (a
+    index is repairable iff its signatures table AND meta exist (a
     pre-metadata index verifies only with explicit parameters)."""
     from ..operators import dedup as DD
+    from ..operators.index_store import read_index_meta
 
     spark = stream.sparkSession
     return DD.lsh_index_exists(spark, index_path) and (
-        DD.read_lsh_meta(spark, index_path) is not None
+        read_index_meta(spark, index_path) is not None
     )
 
 

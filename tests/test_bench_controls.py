@@ -10,6 +10,7 @@ notes.
 
 from __future__ import annotations
 
+import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -124,3 +125,19 @@ def test_summary_line_fits_driver_tail_capture():
         f"bench summary line can reach {len(line)} chars — the driver "
         "tail capture (2000) would truncate it"
     )
+
+
+def test_full_map_name_keeps_canonical_file_for_full_default_runs():
+    default = str(os.cpu_count() or 4)
+    assert bench.full_map_name({}) == "BENCH_FULL.json"
+    assert bench.full_map_name({"SPARK_GRAFT_CPUS": default}) == "BENCH_FULL.json"
+    other = "1" if default != "1" else "2"
+    assert bench.full_map_name({"SPARK_GRAFT_CPUS": other}) == (
+        f"BENCH_FULL_c{other}.json"
+    )
+    assert bench.full_map_name({"SPARK_GRAFT_BENCH_ONLY": "text_stats"}) == (
+        "BENCH_FULL_subset.json"
+    )
+    assert bench.full_map_name(
+        {"SPARK_GRAFT_CPUS": other, "SPARK_GRAFT_BENCH_ONLY": "text_stats"}
+    ) == f"BENCH_FULL_c{other}_subset.json"

@@ -12,6 +12,9 @@ from pyspark.sql import functions as F
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
     dedup as DD,
 )
+from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators.index_store import (
+    read_index_meta,
+)
 from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.operators import (
     similarity as SIM,
 )
@@ -78,7 +81,7 @@ def test_n_day_append_composes_to_full_build(spark, sf_dir, tmp_path):
     assert accumulated == want - day0_internal
 
     # index is self-describing across the lifecycle
-    assert DD.read_lsh_meta(spark, index) == {
+    assert read_index_meta(spark, index) == {
         "k": 3,
         "num_hashes": 64,
         "bands": 16,
