@@ -82,6 +82,61 @@ def _order_proxy(df: DataFrame, key: str) -> F.Column:
     raise TypeError(f"no order proxy for surrogate-key column type: {dt}")
 
 
+def _order_bounds(df: DataFrame, key: str, desc: bool = False) -> DataFrame:
+    """The bounds step of the order bucket: a ONE-ROW frame
+    (``__ob_min``, ``__ob_max``) of the key's exact order-proxy range
+    (negated for ``desc``). NaN is EXCLUDED — one NaN would make the
+    span NaN and floor every row into bucket 0 (a silent
+    single-reducer collapse); NaN rows get their own bucket instead."""
+    proxy = _order_proxy(df, key)
+    if desc:
+        proxy = -proxy
+    if isinstance(df.schema[key].dataType, (T.FloatType, T.DoubleType)):
+        proxy = F.when(~F.isnan(proxy), proxy)
+    return df.agg(F.min(proxy).alias("__ob_min"), F.max(proxy).alias("__ob_max"))
+
+
+def _order_bucket(
+    df: DataFrame,
+    key: str,
+    nbuckets: int,
+    lo: F.Column,
+    hi: F.Column,
+    desc: bool = False,
+    nulls_last: bool | None = None,
+) -> F.Column:
+    """The bucket expression (0..nbuckets-1, plus the NaN and null
+    buckets) of ``key`` against the bounds ``lo``/``hi`` that
+    :func:`_order_bounds` computed — either its broadcast columns or
+    the same values as literals; equal bounds give equal buckets."""
+    if nulls_last is None:
+        nulls_last = desc
+    proxy = _order_proxy(df, key)
+    if desc:
+        proxy = -proxy
+    span = hi - lo
+    # NaN is the GREATEST value in both engines' sorts: it follows the
+    # numbers ascending, precedes them descending; nulls sit outside
+    # both per nulls_last. Bucket ids just encode those positions.
+    if desc:
+        nan_b = -1
+        null_b = nbuckets + 1 if nulls_last else -2
+    else:
+        nan_b = nbuckets
+        null_b = nbuckets + 1 if nulls_last else -1
+    numeric_bucket = F.least(
+        F.lit(nbuckets - 1),
+        F.floor(
+            (proxy - lo)
+            / (F.when(span > 0, span).otherwise(F.lit(1.0)) / nbuckets)
+        ).cast("int"),
+    )
+    bucket = F.when(proxy.isNull(), F.lit(null_b))
+    if isinstance(df.schema[key].dataType, (T.FloatType, T.DoubleType)):
+        bucket = bucket.when(F.isnan(proxy), F.lit(nan_b))
+    return bucket.otherwise(numeric_bucket)
+
+
 def attach_order_bucket(
     df: DataFrame,
     key: str,
@@ -106,45 +161,12 @@ def attach_order_bucket(
     NaN keys (float types): NaN sorts greater than every number in
     both Spark and DuckDB, so NaN rows get their own bucket one past
     the last numeric bucket (before the null bucket when nulls are
-    last) — and the bounds aggregate EXCLUDES NaN, otherwise one NaN
-    makes span NaN and every row floors into bucket 0 (a silent
-    single-reducer collapse)."""
-    if nulls_last is None:
-        nulls_last = desc
-    proxy = _order_proxy(df, key)
-    if desc:
-        proxy = -proxy
-    dt = df.schema[key].dataType
-    is_float = isinstance(dt, (T.FloatType, T.DoubleType))
-    finite = F.when(~F.isnan(proxy), proxy) if is_float else proxy
-    bounds = df.agg(
-        F.min(finite).alias("__ob_min"), F.max(finite).alias("__ob_max")
+    last)."""
+    bucket = _order_bucket(
+        df, key, nbuckets, F.col("__ob_min"), F.col("__ob_max"), desc, nulls_last
     )
-    span = F.col("__ob_max") - F.col("__ob_min")
-    # NaN is the GREATEST value in both engines' sorts: it follows the
-    # numbers ascending, precedes them descending; nulls sit outside
-    # both per nulls_last. Bucket ids just encode those positions.
-    if desc:
-        nan_b = -1
-        null_b = nbuckets + 1 if nulls_last else -2
-    else:
-        nan_b = nbuckets
-        null_b = nbuckets + 1 if nulls_last else -1
-    null_bucket = F.lit(null_b)
-    nan_bucket = F.lit(nan_b)
-    numeric_bucket = F.least(
-        F.lit(nbuckets - 1),
-        F.floor(
-            (proxy - F.col("__ob_min"))
-            / (F.when(span > 0, span).otherwise(F.lit(1.0)) / nbuckets)
-        ).cast("int"),
-    )
-    bucket = F.when(proxy.isNull(), null_bucket)
-    if is_float:
-        bucket = bucket.when(F.isnan(proxy), nan_bucket)
-    bucket = bucket.otherwise(numeric_bucket)
     return (
-        df.crossJoin(F.broadcast(bounds))
+        df.crossJoin(F.broadcast(_order_bounds(df, key, desc)))
         .withColumn(out_col, bucket)
         .drop("__ob_min", "__ob_max")
     )
@@ -168,10 +190,13 @@ def bucketed_rank(
 
     1. every row gets an order-preserving bucket id computed from the
        row's own value against the first order column's exact
-       [min, max] (``attach_order_bucket`` — one KB-sized broadcast,
-       value-deterministic, so re-evaluations agree by construction);
+       [min, max] (value-deterministic, so re-evaluations agree by
+       construction); one eager job counts the rows per bucket and
+       returns the [min, max] it used;
     2. ``row_number()`` partitioned BY BUCKET over the full order —
-       one hash exchange, parallelism = bucket count;
+       one hash exchange, parallelism = bucket count; the returned
+       frame buckets with those [min, max] as literals, so it carries
+       no bounds aggregate and no broadcast join;
     3. per-bucket counts → prefix-sum offsets (one row per OCCUPIED
        bucket, KB-sized at any scale) splice bucket-local ranks into
        the global sequence as a literal-map lookup — no join.
@@ -184,7 +209,8 @@ def bucketed_rank(
 
     Semantics twin: ``ROW_NUMBER() OVER (ORDER BY <order_cols> ASC
     NULLS FIRST)`` — oracle-checked in the registry
-    (``window_bucketed_rank``).
+    (``surrogate_key_dim``, ``star_schema_build``,
+    ``text_rarity_score``).
     """
     if not order_cols:
         raise ValueError("order_cols must be non-empty")
@@ -203,21 +229,19 @@ def bucketed_rank(
     else:
         nbuckets = num_buckets
 
-    # phase 1: value-deterministic, order-preserving bucket id from
-    # the first order column's exact [min, max] — a pure function of
-    # the row, immune to the re-evaluation nondeterminism of sampled
-    # range boundaries (see module docstring). One KB-sized broadcast.
-    tagged = attach_order_bucket(
-        df, order_cols[0], nbuckets, "__br_bucket", nulls_last=False
-    )
-
-    # phase 2: per-bucket counts -> prefix-sum offsets, computed on
+    # phase 1: per-bucket counts -> prefix-sum offsets, computed on
     # the driver (one row per OCCUPIED bucket — KB-sized at any scale,
-    # same sanctioned pattern as the IVF centroid collect). Recomputing
-    # `tagged` for the counts job is safe: bucket ids are
-    # value-deterministic, unlike sampled range boundaries.
+    # same sanctioned pattern as the IVF centroid collect). The bucket
+    # id is a value-deterministic, order-preserving function of the
+    # first order column's exact [min, max] — immune to the
+    # re-evaluation nondeterminism of sampled range boundaries (see
+    # module docstring). The counts job crosses the rows with the
+    # one-row bounds and hands those bounds back with the counts.
+    key = order_cols[0]
+    lo, hi = F.col("__ob_min"), F.col("__ob_max")
     counts = (
-        tagged.groupBy("__br_bucket")
+        df.crossJoin(F.broadcast(_order_bounds(df, key)))
+        .groupBy(_order_bucket(df, key, nbuckets, lo, hi).alias("__br_bucket"), lo, hi)
         .agg(F.count(F.lit(1)).alias("__br_cnt"))
         .collect()
     )
@@ -235,10 +259,14 @@ def bucketed_rank(
         F.col("__br_bucket"),
     )
 
-    # phase 3: rank within bucket over the FULL order (unique order ->
-    # deterministic), one hash exchange on the bucket id; the bucket
-    # offset splices in as a literal-map lookup — no join, no
-    # singleton window in the data plan
+    # phase 2: the data plan buckets with the bounds the counts job
+    # returned, as literals — the same ids without re-running the
+    # bounds aggregate and its broadcast. Rank within bucket over the
+    # FULL order (unique order -> deterministic), one hash exchange on
+    # the bucket id; the bucket offset splices in as a literal-map
+    # lookup — no join, no singleton window in the data plan
+    bounds = [F.lit(counts[0][c]).cast("double") for c in ("__ob_min", "__ob_max")]
+    tagged = df.withColumn("__br_bucket", _order_bucket(df, key, nbuckets, *bounds))
     wlocal = Window.partitionBy("__br_bucket").orderBy(*keys)
     local = tagged.withColumn("__br_local", F.row_number().over(wlocal))
     rank = (offset_expr + F.col("__br_local") + F.lit(offset)).cast("long")

@@ -29,7 +29,7 @@ from ..streaming.incremental import incremental_slice
 from . import dim_date as DDATE
 from . import warehouse as WH
 
-# staging tables the warehouse consumes, in read order
+# staging tables the warehouse consumes (the union of TABLE_INPUTS)
 STAGING_INPUTS = (
     "company", "funds", "funding_rounds", "investments",
     "ipos", "acquisition", "people", "relationships",
@@ -42,12 +42,28 @@ WAREHOUSE_ORDER = (
     "bridge_company_people",
 )
 
+# the staging tables each warehouse table is built from — a table task
+# reads only these (dim_date is a generated spine and reads none)
+TABLE_INPUTS: dict[str, tuple[str, ...]] = {
+    "dim_date": (),
+    "dim_company": ("company",),
+    "dim_funds": ("funds",),
+    "dim_people": ("people",),
+    "fct_investments": ("investments", "funding_rounds"),
+    "fct_ipos": ("ipos",),
+    "fct_acquisition": ("acquisition",),
+    "bridge_company_people": ("relationships",),
+}
+
 
 def read_staging(
-    spark: SparkSession, staging_dir: str, ds: str | None = None
+    spark: SparkSession,
+    staging_dir: str,
+    names: tuple[str, ...],
+    ds: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Read the staging zone with enforced schemas. With ``ds`` set,
-    tables carrying a timestamp ``created_at`` are sliced to
+    """Read the staging tables ``names`` with enforced schemas. With
+    ``ds`` set, tables carrying a timestamp ``created_at`` are sliced to
     created_at::date == ds - 1 day (P3, the reference's daily
     incremental predicate) — pushed into the scan. Tables without a
     typed created_at (people; relationships' is a dirty varchar,
@@ -56,7 +72,7 @@ def read_staging(
     from pyspark.sql import types as T
 
     out: dict[str, DataFrame] = {}
-    for name in STAGING_INPUTS:
+    for name in names:
         schema = schemas.STAGING[name]
         df = SIO.read_parquet(spark, f"{staging_dir}/{name}", schema=schema)
         has_ts_created = any(
@@ -67,35 +83,6 @@ def read_staging(
             df = incremental_slice(df, "created_at", ds, lag_days=1)
         out[name] = df
     return out
-
-
-def build_warehouse(
-    spark: SparkSession, staging: dict[str, DataFrame]
-) -> dict[str, DataFrame]:
-    """Compose all warehouse tables as lazy DataFrames, dependency-
-    ordered. Nothing executes here — callers write or collect."""
-    dim_date = DDATE.build_dim_date(spark)
-    dim_company = WH.build_dim_company(staging["company"])
-    dim_funds = WH.build_dim_funds(staging["funds"], dim_date)
-    dim_people = WH.build_dim_people(staging["people"])
-    tables: dict[str, DataFrame] = {
-        "dim_date": dim_date,
-        "dim_company": dim_company,
-        "dim_funds": dim_funds,
-        "dim_people": dim_people,
-        "fct_investments": WH.build_fct_investments(
-            staging["investments"], staging["funding_rounds"],
-            dim_company, dim_funds, dim_date,
-        ),
-        "fct_ipos": WH.build_fct_ipos(staging["ipos"], dim_company, dim_date),
-        "fct_acquisition": WH.build_fct_acquisition(
-            staging["acquisition"], dim_company, dim_date
-        ),
-        "bridge_company_people": WH.build_bridge_company_people(
-            staging["relationships"], dim_people, dim_company
-        ),
-    }
-    return {name: tables[name] for name in WAREHOUSE_ORDER}
 
 
 # incremental-merge metadata: surrogate + natural key per dim, natural
@@ -143,14 +130,31 @@ def run_warehouse_table(
 
     Self-referencing merges land via ``replace_parquet_atomic`` (the
     merge plan reads the same path it replaces).
+
+    Only the staging tables in ``TABLE_INPUTS[name]`` are read, and
+    every warehouse read carries its ``schemas.WAREHOUSE`` schema, so
+    no read runs a schema-inference job.
     """
     from ..operators.surrogate import max_key
 
-    staging = read_staging(spark, staging_dir, ds)
+    if name not in TABLE_INPUTS:
+        raise ValueError(f"unknown warehouse table: {name}")
+    staging = read_staging(spark, staging_dir, TABLE_INPUTS[name], ds)
     path = f"{warehouse_dir}/{name}"
 
     def _persisted(table: str) -> DataFrame:
-        return spark.read.parquet(f"{warehouse_dir}/{table}")
+        return SIO.read_parquet(
+            spark, f"{warehouse_dir}/{table}", schema=schemas.WAREHOUSE[table]
+        )
+
+    def _existing() -> DataFrame | None:
+        # the merge base of a daily run; None in full mode or before
+        # the table's first write
+        if ds is None:
+            return None
+        return SIO.read_parquet_if_exists(
+            spark, path, schema=schemas.WAREHOUSE[name]
+        )
 
     if name == "dim_date":
         SIO.write_parquet(DDATE.build_dim_date(spark), path, mode="overwrite")
@@ -177,7 +181,7 @@ def run_warehouse_table(
             return WH.build_dim_funds(src_df, _persisted("dim_date"), off)
 
         sk, nk = _DIM_KEYS[name]
-        old = SIO.read_parquet_if_exists(spark, path) if ds is not None else None
+        old = _existing()
         if old is None:
             SIO.write_parquet(build_dim(staging[src], 0), path, mode="overwrite")
         else:
@@ -210,14 +214,13 @@ def run_warehouse_table(
                 staging["acquisition"], _persisted("dim_company"),
                 _persisted("dim_date"),
             )
-        if ds is None or SIO.read_parquet_if_exists(spark, path) is None:
+        old = _existing()
+        if old is None:
             SIO.write_parquet(df, path, mode="overwrite")
         else:
-            merged = SIO.upsert_parquet(spark, df, path, keys=[_FACT_KEYS[name]])
+            merged = SIO.merge_upsert(df, old, keys=[_FACT_KEYS[name]])
             SIO.replace_parquet_atomic(spark, merged, path)
         return
-
-    raise ValueError(f"unknown warehouse table: {name}")
 
 
 def run_warehouse_pipeline(
@@ -261,6 +264,10 @@ def run_warehouse_pipeline(
                 )
             raise
         manifest[name] = (
-            spark.read.parquet(f"{warehouse_dir}/{name}").count() if audit else -1
+            SIO.read_parquet(
+                spark, f"{warehouse_dir}/{name}", schema=schemas.WAREHOUSE[name]
+            ).count()
+            if audit
+            else -1
         )
     return manifest

@@ -124,15 +124,23 @@ from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.stream
     incremental as INC,
 )
 
-# sf0.001 root for the driver's entry() smoke contract, derived from
-# the same env plumbing the bench uses (sibling directory of
-# $SPARK_GRAFT_SF_DIR) instead of a hardcoded testdata literal
-SF001 = _os.path.join(
-    _os.path.dirname(
-        _os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1").rstrip("/")
-    ),
-    "sf0.001",
-)
+# the bench's default $SPARK_GRAFT_SF_DIR (bench.py)
+_DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+
+
+def sf001_root(sf_dir: str) -> str:
+    """The sf0.001 root that the entry() smoke query reads: the
+    ``sf0.001`` sibling of ``sf_dir`` ($SPARK_GRAFT_SF_DIR, the same
+    env plumbing the bench uses). A derived path that is relative (a
+    relative ``sf_dir`` such as ``sf0.1`` has no parent directory) or
+    missing falls back to the sibling of the default root."""
+    derived = _os.path.join(_os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    if _os.path.isabs(derived) and _os.path.isdir(derived):
+        return derived
+    return _os.path.join(_os.path.dirname(_DEFAULT_SF_DIR), "sf0.001")
+
+
+SF001 = sf001_root(_os.environ.get("SPARK_GRAFT_SF_DIR", _DEFAULT_SF_DIR))
 
 
 def _dsum(col: F.Column) -> F.Column:

@@ -130,6 +130,7 @@ def _struct(pairs: list[tuple[str, T.DataType]]) -> T.StructType:
 _TS = T.TimestampType()
 _STR = T.StringType()
 _INT = T.IntegerType()
+_DATE = T.DateType()
 _DEC15_2 = T.DecimalType(15, 2)
 
 STAGING: dict[str, T.StructType] = {
@@ -291,6 +292,36 @@ WAREHOUSE: dict[str, T.StructType] = {
     # :543-551); *_usd amounts that pass through to_usd's CASE become
     # DoubleType (decimal×double literal → double), matching Spark's
     # type coercion in the reference.
+    # the 80-year spine (init_dwh.sql:199-236), plans/dim_date.py
+    "dim_date": _struct(
+        [
+            ("date_id", _INT),
+            ("date_actual", _DATE),
+            ("day_suffix", _STR),
+            ("day_name", _STR),
+            ("day_of_year", _INT),
+            ("week_of_month", _INT),
+            ("week_of_year", _INT),
+            ("week_of_year_iso", _STR),
+            ("month_actual", _INT),
+            ("month_name", _STR),
+            ("month_name_abbreviated", _STR),
+            ("quarter_actual", _INT),
+            ("quarter_name", _STR),
+            ("year_actual", _INT),
+            ("first_day_of_week", _DATE),
+            ("last_day_of_week", _DATE),
+            ("first_day_of_month", _DATE),
+            ("last_day_of_month", _DATE),
+            ("first_day_of_quarter", _DATE),
+            ("last_day_of_quarter", _DATE),
+            ("first_day_of_year", _DATE),
+            ("last_day_of_year", _DATE),
+            ("mmyyyy", _STR),
+            ("mmddyyyy", _STR),
+            ("weekend_indr", _STR),
+        ]
+    ),
     "dim_company": _struct(
         [
             ("sk_company_id", T.LongType()),

@@ -87,6 +87,88 @@ def test_pipeline_end_to_end(spark, staging_dir, tmp_path):
     assert bridge["title"] == "CEO"
 
 
+def test_written_schemas_match_declared(spark, staging_dir, tmp_path):
+    """The table tasks read the warehouse with the schemas.WAREHOUSE
+    entries instead of inferring them, so each table plans.warehouse
+    writes must carry exactly its declared column names and types."""
+    wh = str(tmp_path / "wh_schema")
+    P.run_warehouse_pipeline(spark, staging_dir, wh)
+    assert set(schemas.WAREHOUSE) == set(P.WAREHOUSE_ORDER)
+    for name in P.WAREHOUSE_ORDER:
+        written = spark.read.parquet(f"{wh}/{name}").schema
+        assert [(f.name, f.dataType) for f in written] == [
+            (f.name, f.dataType) for f in schemas.WAREHOUSE[name]
+        ], name
+
+
+def test_table_reads_pinned(spark, staging_dir, tmp_path, monkeypatch):
+    """Over a full load and one daily sweep, each table task reads
+    only its own staging inputs, every warehouse read passes the
+    table's declared schema, and no parquet read bypasses
+    sources.io.read_parquet."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from elt_pipeline_for_venture_capital_business_with_airflow_pyspark_spark.sources import (
+        io as SIO,
+    )
+
+    inputs = {
+        "dim_date": set(),
+        "dim_company": {"company"},
+        "dim_funds": {"funds"},
+        "dim_people": {"people"},
+        "fct_investments": {"investments", "funding_rounds"},
+        "fct_ipos": {"ipos"},
+        "fct_acquisition": {"acquisition"},
+        "bridge_company_people": {"relationships"},
+    }
+    assert set().union(*inputs.values()) == set(P.STAGING_INPUTS)
+    wh = str(tmp_path / "wh_reads")
+    reads: list[tuple[str, str, str, object]] = []  # (phase, table, path, schema)
+    parquet_paths: list[str] = []
+    state = {"phase": "full", "table": None}
+
+    read_parquet = SIO.read_parquet
+    run_table = P.run_warehouse_table
+    reader_parquet = DataFrameReader.parquet
+
+    def read(spark_, path, schema=None):
+        reads.append((state["phase"], state["table"], path, schema))
+        return read_parquet(spark_, path, schema=schema)
+
+    def table(spark_, name, *a, **k):
+        state["table"] = name
+        return run_table(spark_, name, *a, **k)
+
+    def parquet(self, *paths, **options):
+        parquet_paths.extend(paths)
+        return reader_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(SIO, "read_parquet", read)
+    monkeypatch.setattr(P, "run_warehouse_table", table)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    P.run_warehouse_pipeline(spark, staging_dir, wh, audit=True)
+    state["phase"] = "daily"
+    for name in P.WAREHOUSE_ORDER:
+        P.run_warehouse_table(spark, name, staging_dir, wh, ds="2013-07-02")
+    monkeypatch.undo()
+
+    assert sorted(parquet_paths) == sorted(r[2] for r in reads)
+    for phase in ("full", "daily"):
+        for name in P.WAREHOUSE_ORDER:
+            staged = {
+                path.rsplit("/", 1)[1]
+                for ph, t, path, _ in reads
+                if ph == phase and t == name and path.startswith(staging_dir)
+            }
+            assert staged == inputs[name], (phase, name)
+    warehouse_reads = [(path, schema) for _, _, path, schema in reads if path.startswith(wh)]
+    # persisted dims (full + daily), audit counts, daily merge bases
+    assert len(warehouse_reads) >= 3 * len(P.WAREHOUSE_ORDER)
+    for path, schema in warehouse_reads:
+        assert schema == schemas.WAREHOUSE[path.rsplit("/", 1)[1]], path
+
+
 def test_pipeline_rerun_idempotent(spark, staging_dir, tmp_path):
     wh = str(tmp_path / "wh2")
     m1 = P.run_warehouse_pipeline(spark, staging_dir, wh, audit=True)

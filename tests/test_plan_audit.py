@@ -89,19 +89,15 @@ NESTED_LOOP_OK = {
     # TPC-H Q22's scalar subquery (global positive-balance average)
     # cross-joins the ONE-ROW (sum, count) aggregate — constant cost.
     "q22_dormant_customers",
-    # deterministic surrogate keys cross-join the ONE-ROW exact
-    # [min, max] bounds aggregate (surrogate.attach_order_bucket) —
-    # the KB-sized broadcast that replaced sampled range boundaries.
-    "surrogate_key_dim",
-    "star_schema_build",
-    # r7 two-phase quantile rewrite: the exact-median and rarity
-    # ranks now ride attach_order_bucket / exact_quantiles, whose
-    # ONE-ROW [min, max] bounds (and one-row n-rows frame) attach via
-    # broadcast — the same constant-cost KB-broadcast shape as
-    # surrogate_key_dim, traded for the retired SinglePartition
-    # window (the strictly worse plan this audit exists to prevent).
+    # r7 two-phase quantile rewrite: the exact median now rides
+    # attach_order_bucket / exact_quantiles, whose ONE-ROW [min, max]
+    # bounds (and one-row n-rows frame) attach via broadcast — a
+    # constant-cost KB-broadcast shape, traded for the retired
+    # SinglePartition window (the strictly worse plan this audit
+    # exists to prevent). surrogate_key_dim, star_schema_build and
+    # text_rarity_score are not listed: bucketed_rank buckets its
+    # returned frame with literal bounds, so their plans hold none.
     "agg_exact_median",
-    "text_rarity_score",
     # r8: per-source quality-quartile curation rides the same
     # exact_quantiles machinery — the ONE-ROW global [min, max]
     # bounds frame broadcasts (attach_order_bucket's value buckets
@@ -118,7 +114,7 @@ NESTED_LOOP_OK = {
     # r9: sequence packing rides partitioned_cumsum, whose
     # attach_order_bucket stage broadcasts the same ONE-ROW [min, max]
     # bounds frame — identical constant-cost shape as
-    # surrogate_key_dim / agg_exact_median above.
+    # agg_exact_median above.
     "text_pack_chunks",
     # MMR's CANDIDATE stage is the brute cosine baseline
     # (cosine_topk: broadcast queries × corpus scan), same documented
